@@ -1,12 +1,15 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Data-quality profiling (reference DataQualityChecker, main.py:50-76)
-  * as ONE Spark job: row count, per-column null counts, and duplicate
-  * rows come out of a single aggregate pass (the reference makes three
-  * pandas passes); the score is pure driver arithmetic on the result.
+/** Data-quality profiling (reference DataQualityChecker, main.py:50-76).
+  * The row count and the per-column null counts are aggregate
+  * expressions ([[countExprs]]) that work both in `agg` and in
+  * `Dataset.observe`, so the pipeline collects them on the pass that
+  * writes the table. The distinct-row count cannot be observed
+  * (`observe` takes no distinct aggregates) and needs a pass of its
+  * own. The score is pure driver arithmetic on the counts.
   */
 object Quality {
 
@@ -31,21 +34,31 @@ object Quality {
     }
   }
 
-  /** One-pass profile: count(*), per-column null sums and
-    * count_distinct(all columns) in a single hash aggregate. At scale
-    * this is a scan + one partial-agg exchange of a single row. */
-  def profile(df: DataFrame): Profile = {
-    val cols = df.columns.toSeq
-    if (df.isEmpty) return Profile(0L, cols.size, cols.map(_ -> 0L).toMap, 0L)
-    val aggs =
-      Seq(count_distinct(struct(cols.map(col): _*)).as("__distinct")) ++
-        cols.map(c => sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__nulls_$c"))
-    val row = df.agg(count(lit(1)).as("__rows"), aggs: _*).collect()(0)
-    val rows = row.getAs[Long]("__rows")
+  /** Row count (`__rows`) and per-column null counts (`__nulls_<col>`):
+    * plain aggregates, valid in `agg` and in `Dataset.observe`. */
+  def countExprs(cols: Seq[String]): Seq[Column] =
+    count(lit(1)).as("__rows") +: cols.map(c => count_if(col(c).isNull).as(s"__nulls_$c"))
+
+  /** Count of distinct rows over `cols`. */
+  def distinctRows(cols: Seq[String]): Column =
+    count_distinct(struct(cols.map(col): _*)).as("__distinct")
+
+  /** The profile from the values of [[countExprs]] and the distinct-row
+    * count. */
+  def fromCounts(counts: Map[String, Any], cols: Seq[String], distinct: Long): Profile = {
+    val rows = counts("__rows").asInstanceOf[Long]
     Profile(
       totalRows = rows,
       totalColumns = cols.size,
-      nullCounts = cols.map(c => c -> row.getAs[Long](s"__nulls_$c")).toMap,
-      duplicateRows = rows - row.getAs[Long]("__distinct"))
+      nullCounts = cols.map(c => c -> counts(s"__nulls_$c").asInstanceOf[Long]).toMap,
+      duplicateRows = rows - distinct)
+  }
+
+  /** One-job profile of a frame: [[countExprs]] and [[distinctRows]] in a
+    * single hash aggregate. */
+  def profile(df: DataFrame): Profile = {
+    val cols = df.columns.toSeq
+    val row = df.agg(distinctRows(cols), countExprs(cols): _*).collect()(0)
+    fromCounts(row.getValuesMap[Any](row.schema.fieldNames.toSeq), cols, row.getAs[Long]("__distinct"))
   }
 }

@@ -1,36 +1,64 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructType, TimestampType}
+import scala.jdk.CollectionConverters._
 
 /** Source/sink surface (reference §2.1):
   *  - S1 CSV scan with explicit schema (the reference infers,
   *    main.py:383; production paths declare — SURVEY §1)
   *  - S3 CSV sink, S4 table append sink (parquet; partitioned writes
   *    subsume the reference's 1000-row insert batching, main.py:518-530)
-  *  - S5 one-row metadata append
+  *  - S5 load-audit metadata append
   */
 object Sources {
 
-  /** S1 (main.py:377-400): header CSV with declared schema; empty-file
-    * guard mirrors the reference's EmptyDataError path. */
+  /** S1 (main.py:377-400): header CSV with declared schema. The
+    * reference's empty-file guard (EmptyDataError) is [[Pipeline]]'s: it
+    * sees the row count on the pass that loads the table, so this
+    * function runs no job. */
   def readCsv(spark: SparkSession, path: String, table: String): DataFrame = {
     val reader = spark.read.option("header", "true")
-    val df = graft.Tables.referenceSchemas.get(table) match {
+    graft.Tables.referenceSchemas.get(table) match {
       case Some(schema) => reader.schema(schema).csv(path)
       case None         => reader.option("inferSchema", "true").csv(path)
     }
-    if (df.isEmpty) throw new IllegalArgumentException(s"No data found in file: $path")
-    df
   }
 
   /** S3 (main.py:246-261). */
   def writeCsv(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
 
-  /** S4 (main.py:516-530): append to a parquet table directory. */
-  def appendTable(df: DataFrame, dir: String, table: String): Unit =
-    df.write.mode(SaveMode.Append).parquet(s"$dir/$table.parquet")
+  /** S4 (main.py:516-530): append to a parquet table directory. Returns
+    * the data files this write added, found by listing the directory
+    * before and after it; concurrent appends to one table directory
+    * would make that listing (and Spark's shared `_temporary`) unsafe. */
+  def appendTable(df: DataFrame, dir: String, table: String): Seq[String] = {
+    val path = new Path(s"$dir/$table.parquet")
+    val before = tableFiles(df.sparkSession, path)
+    df.write.mode(SaveMode.Append).parquet(path.toString)
+    (tableFiles(df.sparkSession, path) -- before).toSeq.sorted
+  }
+
+  /** Undo an [[appendTable]]: delete the files it added, and the table
+    * directory too when no data file is left in it. */
+  private[etl] def removeAppended(spark: SparkSession, dir: String, table: String, files: Seq[String]): Unit = {
+    val path = new Path(s"$dir/$table.parquet")
+    val fs = fsOf(spark, path)
+    files.foreach(f => fs.delete(new Path(f), false))
+    if (tableFiles(spark, path).isEmpty) fs.delete(path, true)
+  }
+
+  /** The visible data files directly under a table directory. */
+  private def tableFiles(spark: SparkSession, path: Path): Set[String] = {
+    val fs = fsOf(spark, path)
+    if (!fs.exists(path)) Set.empty
+    else fs.listStatus(path).iterator
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+      .map(_.getPath.toString).toSet
+  }
 
   /** Overwrite variant used by the post-load customer-totals refresh
     * (the reference UPDATEs in place, main.py:618-628; we snapshot). */
@@ -40,23 +68,38 @@ object Sources {
   def readTable(spark: SparkSession, dir: String, table: String): DataFrame =
     spark.read.parquet(s"$dir/$table.parquet")
 
+  /** A table read with its schema declared, which skips the footer
+    * inference job of [[readTable]]. */
+  def readTable(spark: SparkSession, dir: String, table: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(s"$dir/$table.parquet")
+
   /** P11 (main.py:507): deterministic whole-frame content fingerprint.
     * Partition/order-independent: per-row 64-bit hash of the canonical
     * JSON encoding, combined with commutative sum + xor, hex-encoded.
     * (The reference hashes pandas' rendered string; semantic equivalent
-    * = stable content checksum, SURVEY §2.2 P11.) */
+    * = stable content checksum, SURVEY §2.2 P11.) The sum and xor are
+    * [[checksumExprs]], which the pipeline observes on the pass that
+    * writes the table; this function is the same in one job of its own. */
   def checksum(df: DataFrame): String = {
-    val h = xxhash64(to_json(struct(df.columns.map(col).toSeq: _*)))
-    val row = df.agg(
-      // decimal sum: exact and overflow-free under ANSI mode at any row count
-      sum(h.cast("decimal(38,0)")).as("s"),
-      expr(s"bit_xor(xxhash64(to_json(struct(${df.columns.mkString(",")}))))").as("x"),
-      count(lit(1)).as("n")).collect()(0)
-    if (row.getAs[Long]("n") == 0L) "empty"
-    else {
-      val s = row.getAs[java.math.BigDecimal]("s").toBigInteger.toString(16)
-      f"$s-${row.getAs[Long]("x")}%016x"
-    }
+    val exprs = checksumExprs(df.columns.toSeq)
+    val row = df.agg(exprs.head, exprs.tail: _*).collect()(0)
+    checksumOf(row.getValuesMap[Any](row.schema.fieldNames.toSeq))
+  }
+
+  /** The checksum's two aggregates over `cols` (`__ck_sum`, `__ck_xor`),
+    * valid in `agg` and in `Dataset.observe`. */
+  def checksumExprs(cols: Seq[String]): Seq[Column] = {
+    val h = xxhash64(to_json(struct(cols.map(col): _*)))
+    // decimal sum: exact and overflow-free under ANSI mode at any row count
+    Seq(sum(h.cast("decimal(38,0)")).as("__ck_sum"), bit_xor(h).as("__ck_xor"))
+  }
+
+  /** The checksum from the values of [[checksumExprs]]; both are null
+    * over no rows. */
+  def checksumOf(sums: Map[String, Any]): String = sums("__ck_sum") match {
+    case null => "empty"
+    case s: java.math.BigDecimal =>
+      f"${s.toBigInteger.toString(16)}-${sums("__ck_xor").asInstanceOf[Long]}%016x"
   }
 
   /** Date-partitioned parquet layout — the at-rest organization a
@@ -128,10 +171,18 @@ object Sources {
       data_quality_score: Double,
       checksum: String)
 
-  def appendMetadata(spark: SparkSession, dir: String, meta: LoadMeta): Unit = {
-    import spark.implicits._
-    Seq(meta).toDF()
-      .withColumn("etl_timestamp", current_timestamp())
+  /** The `etl_metadata` schema in written order: [[LoadMeta]], then
+    * `etl_timestamp`. */
+  lazy val metadataSchema: StructType =
+    Encoders.product[LoadMeta].schema.add("etl_timestamp", TimestampType)
+
+  /** All of a run's audit rows in one append, each with its own
+    * `etl_timestamp`: concurrent appends to one parquet path share
+    * `_temporary` and are unsafe. */
+  def appendMetadata(spark: SparkSession, dir: String,
+                     rows: Seq[(LoadMeta, java.sql.Timestamp)]): Unit = {
+    val data = rows.map { case (m, ts) => Row.fromSeq(m.productIterator.toSeq :+ ts) }
+    spark.createDataFrame(data.asJava, metadataSchema)
       .write.mode(SaveMode.Append).parquet(s"$dir/etl_metadata.parquet")
   }
 

@@ -110,12 +110,6 @@ object Sketches {
   def hyperplaneBits(vec: Column, planes: Seq[Seq[Double]]): Column =
     VectorExpressions.hyperplaneSignBits(vec, planes)
 
-  /** Band keys over a bit signature (for bucketed cosine LSH). */
-  def bitBandKeys(bits: Column, bands: Int, bitsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)), b =>
-      struct(b.as("band"),
-             xxhash64(slice(bits, b * bitsPerBand + 1, lit(bitsPerBand))).as("key")))
-
   /** Engine-portable band keys over a bit signature: the band's bits as
     * a literal '0'/'1' string — `substr(string_agg(bit), b·w+1, w)`
     * rebuilds it anywhere. A w-char key is as discriminative as a

@@ -132,7 +132,4 @@ object TextFunctions {
     * DuckDB/pandas md5() over UTF-8 produce the same lowercase hex. */
   def fingerprintSketch(text: Column, k: Int): Column =
     TextExpressions.fingerprintSketch(text, 8, k)
-
-  /** Single 64-bit content fingerprint of the whole document. */
-  def contentHash(text: Column): Column = xxhash64(text)
 }

@@ -199,35 +199,49 @@ class EtlSpec extends SparkSpec {
       Seq((1L, "a"), (2L, "b2"), (3L, "c2"), (4L, "d")))
   }
 
-  // -- End-to-end on the reference's own CSVs -------------------------
+  // -- End-to-end pipeline -------------------------------------------
 
-  test("e2e pipeline on /root/reference sample CSVs") {
-    val refDir = "/root/reference"
-    val out = java.nio.file.Files.createTempDirectory("graft-etl").toString
-    val inputs = Seq(
-      (s"$refDir/sample_customers.csv", "customers"),
-      (s"$refDir/sample_products.csv", "products"),
-      (s"$refDir/sample_orders.csv", "orders"),
-      (s"$refDir/sample_order_items.csv", "order_items"))
-    val m = Pipeline.run(spark, inputs, out)
-    assert(m.tablesFailed == 0, s"failed tables: ${m.tablesFailed}")
-    assert(m.tablesProcessed == 4)
-    assert(m.qualityScores.values.forall(s => s > 0 && s <= 100))
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
 
-    // post-load refresh: spot-check one customer's totals against a
-    // direct aggregate over the loaded orders
+  private def writeFile(path: String, lines: String*): String = {
+    java.nio.file.Files.write(java.nio.file.Paths.get(path), lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    path
+  }
+
+  /** The four inputs `DataGen.writeSampleData` writes under `dir`. */
+  private def sampleInputs(dir: String): Seq[(String, String)] =
+    Pipeline.loadOrder.map(t => (s"$dir/sample_$t", t))
+
+  /** After the refresh every customer's totals equal a direct aggregate
+    * over the loaded completed orders, and customers without one carry
+    * (0, 0.0). */
+  private def assertCustomerTotals(out: String): Unit = {
     val cust = Sources.readTable(spark, out, "customers")
     val orders = Sources.readTable(spark, out, "orders")
       .filter(col("order_status") === "Completed")
     val expect = orders.groupBy("customer_id")
       .agg(count(lit(1)).as("n"), round(sum("total_amount"), 2).as("amt"))
+    assert(cust.join(expect, Seq("customer_id")).count() > 0, "no customer has a completed order")
     val joined = cust.join(expect, Seq("customer_id"))
       .filter(col("total_orders") =!= col("n") ||
               abs(col("total_spent") - col("amt")) > 0.01)
     assert(joined.count() == 0, "customer totals disagree with orders aggregate")
-    // customers without completed orders carry (0, 0.0)
     val zero = cust.join(expect, Seq("customer_id"), "left_anti")
     assert(zero.filter(col("total_orders") =!= 0 || col("total_spent") =!= 0.0).count() == 0)
+  }
+
+  test("e2e pipeline on DataGen sample CSVs") {
+    val in = tempDir("graft-etl-in")
+    DataGen.writeSampleData(spark, in)
+    val out = tempDir("graft-etl")
+    val inputs = sampleInputs(in)
+    val m = Pipeline.run(spark, inputs, out)
+    assert(m.tablesFailed == 0, s"failed tables: ${m.failures}")
+    assert(m.tablesProcessed == 4)
+    assert(m.qualityScores.values.forall(s => s > 0 && s <= 100))
+
+    assertCustomerTotals(out)
 
     // analytics + monitoring surfaces run and return sane shapes
     val rep = Pipeline.analyticsReport(spark, out)
@@ -241,6 +255,91 @@ class EtlSpec extends SparkSpec {
     val meta = Sources.readTable(spark, out, "etl_metadata")
     assert(meta.count() == 4)
     assert(meta.filter(col("data_quality_score") <= 0).count() == 0)
+
+    // the single pass agrees with the separate count, profile and
+    // checksum jobs over the same transformed input
+    val rows = meta.collect().map(r => r.getAs[String]("table_name") -> r).toMap
+    inputs.foreach { case (path, t) =>
+      val df = Transforms(t, Sources.readCsv(spark, path, t))
+      val n = df.count()
+      val score = Quality.profile(df).score
+      assert(rows(t).getAs[Long]("records_processed") == n, t)
+      assert(rows(t).getAs[Double]("data_quality_score") == score, t)
+      assert(rows(t).getAs[String]("checksum") == Sources.checksum(df), t)
+      assert(m.qualityScores(t) == score, t)
+    }
+    assert(m.totalRecords == rows.values.map(_.getAs[Long]("records_processed")).sum)
+
+    // the reports read every table with its declared schema; it must be
+    // the schema the files carry
+    (Pipeline.loadOrder :+ "etl_metadata").foreach { t =>
+      def fields(st: org.apache.spark.sql.types.StructType) = st.fields.map(f => f.name -> f.dataType).toSeq
+      assert(fields(Pipeline.writtenSchema(spark, t)) == fields(Sources.readTable(spark, out, t).schema), t)
+    }
+  }
+
+  test("pipeline quality equals Quality.profile with duplicates and nulls; a rerun counts only its own rows") {
+    val in = tempDir("graft-etl-dups")
+    val inputs = Seq(
+      (writeFile(s"$in/customers.csv",
+        "customer_id,first_name,last_name,email,phone,registration_date,country,city,customer_segment",
+        "1,Ann,Lee,ann@x.com,555-1,2024-01-02,US,Boston,Premium",
+        "1,Ann,Lee,ann@x.com,555-1,2024-01-02,US,Boston,Premium",
+        "2,Bob,Ng,bob@x.com,,2024-02-03,UK,,Regular",
+        "3,Cy,Oh,cy@x.com,555-3,,Germany,Berlin,",
+        "4,Di,Pe,no-at-sign,555-4,2024-03-04,US,NYC,Regular"), "customers"),
+      (writeFile(s"$in/products.csv",
+        "product_id,product_name,category,subcategory,brand,unit_price,cost_price,stock_quantity,weight_kg,supplier_id",
+        "10,Widget,Tools,Hand,Acme,9.99,5.00,10,1.5,7",
+        "10,Widget,Tools,Hand,Acme,9.99,5.00,10,1.5,7",
+        "11,Gadget,Tools,,Acme,19.99,12.00,-3,,7",
+        "12,Broken,Tools,Hand,Acme,0,1.00,1,1.0,7"), "products"),
+      // every row fails a transform rule: the table loads with no rows
+      (writeFile(s"$in/orders.csv",
+        "order_id,customer_id,order_date,order_status,shipping_method,payment_method," +
+          "subtotal,tax_amount,shipping_cost,discount_amount,total_amount,shipping_address,order_priority",
+        "100,1,2024-04-01,Completed,Ground,Card,-5.0,0.0,0.0,0.0,-5.0,1 Main St,Low"), "orders"))
+    val expected = inputs.map { case (path, t) =>
+      t -> Quality.profile(Transforms(t, Sources.readCsv(spark, path, t))).score
+    }.toMap
+    assert(expected("customers") < 100.0 && expected("products") < 100.0)
+    assert(expected("orders") == 0.0)
+
+    val out = tempDir("graft-etl-dups-out")
+    val first = Pipeline.run(spark, inputs, out)
+    assert(first.tablesFailed == 0, s"failed tables: ${first.failures}")
+    assert(first.qualityScores == expected)
+    assert(first.totalRecords == 4 + 3)
+    // the second run appends to the same tables; the whole directory now
+    // holds every row twice, but each run's score counts its own rows
+    val second = Pipeline.run(spark, inputs, out)
+    assert(second.qualityScores == expected)
+    assert(Quality.profile(Sources.readTable(spark, out, "products")).score != expected("products"))
+    assert(Sources.readTable(spark, out, "etl_metadata").count() == 6)
+  }
+
+  test("pipeline failures stay isolated under concurrent loads") {
+    val in = tempDir("graft-etl-fail")
+    DataGen.writeSampleData(spark, in, 200, 50, 150)
+    val emptyProducts = writeFile(s"$in/empty_products.csv",
+      "product_id,product_name,category,subcategory,brand,unit_price,cost_price,stock_quantity,weight_kg,supplier_id")
+    val inputs = Seq(
+      (s"$in/sample_customers", "customers"),
+      (emptyProducts, "products"),
+      (s"$in/sample_orders", "orders"),
+      (s"$in/no_such_order_items.csv", "order_items"))
+    val out = tempDir("graft-etl-fail-out")
+    val m = Pipeline.run(spark, inputs, out)
+    assert(m.tablesFailed == 2 && m.tablesProcessed == 2)
+    assert(m.failures.keySet == Set("products", "order_items"))
+    assert(m.failures("products").contains(s"No data found in file: $emptyProducts"))
+    assert(m.qualityScores.keySet == Set("customers", "orders"))
+    val meta = Sources.readTable(spark, out, "etl_metadata")
+    assert(meta.select("table_name").as[String].collect().toSet == Set("customers", "orders"))
+    Seq("products", "order_items").foreach { t =>
+      assert(!new java.io.File(s"$out/$t.parquet").exists(), s"$t left files behind")
+    }
+    assertCustomerTotals(out)
   }
 
   test("writeSortedByKey produces disjoint per-file key ranges (file-skipping layout)") {

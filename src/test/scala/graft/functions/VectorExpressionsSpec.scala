@@ -12,6 +12,32 @@ class VectorExpressionsSpec extends SparkSpec {
   private def hofDot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
+  test("hasNullElement equals a per-element isNullAt walk on writer-produced arrays " +
+       "at 63, 64 and 65 elements") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+    val rnd = new scala.util.Random(17L)
+    for {
+      elem <- Seq[DataType](DoubleType, IntegerType)
+      n <- Seq(63, 64, 65)
+      // no nulls; a null at each position alone; random null sets
+      nulls <- Seq(Set.empty[Int]) ++ (0 until n).map(Set(_)) ++
+        Seq.fill(20)((0 until n).filter(_ => rnd.nextInt(8) == 0).toSet)
+    } {
+      val values = (0 until n).map[Any](i =>
+        if (nulls(i)) null else if (elem == DoubleType) i * 0.5 else i: Any)
+      val toUnsafe = UnsafeProjection.create(Array[DataType](ArrayType(elem, containsNull = true)))
+      val arr = toUnsafe(InternalRow(new GenericArrayData(values.toArray[Any]))).getArray(0)
+      assert(arr.isInstanceOf[UnsafeArrayData])
+      val walk = (0 until n).exists(arr.isNullAt)
+      assert(walk == nulls.nonEmpty)
+      assert(VectorExpressions.hasNullElement(arr) == walk, s"$elem n=$n nulls=$nulls")
+      assert(VectorExpressions.hasNullElement(new GenericArrayData(values.toArray[Any])) == walk)
+    }
+  }
+
   test("DotProduct matches the HOF fold exactly") {
     val df = (1 to 50).map { i =>
       (Seq.tabulate(64)(j => (i * 31 + j) * 0.137 - 4.0),
