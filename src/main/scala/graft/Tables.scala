@@ -1,7 +1,13 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types._
+import scala.util.control.NonFatal
 
 /** Central table registry for the driver's testdata star schema
   * (TESTDATA.md / FIXTURES.md §B) and the reference's five-table schema
@@ -17,8 +23,9 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Parquet loader — schema comes from parquet footers (self-describing);
-    * column pruning + predicate pushdown apply downstream automatically.
+  /** Parquet loader. The schema comes from one footer, read on the driver
+    * by [[readParquet]], so building a query over the table starts no
+    * Spark job; column pruning and predicate pushdown apply downstream.
     *
     * TIMESTAMP(NANOS) columns (pandas/arrow default; `events.ts`) are not
     * representable in Spark's microsecond TimestampType, so sessions must
@@ -34,7 +41,7 @@ object Tables {
     * wall-clock reinterpretation that matches a naive-TIMESTAMP oracle
     * bit-for-bit. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = readParquet(spark, s"$dir/$name.parquet")
     val nanosFixed =
       if (name == "events" && df.schema("ts").dataType == LongType)
         // integer `div`, not `/`: float division of int64 nanos rounds in
@@ -43,6 +50,62 @@ object Tables {
           org.apache.spark.sql.functions.expr("ts div 1000")))
       else df
     normalizeNtz(nanosFixed)
+  }
+
+  /** `spark.read.parquet(path)` with the schema declared from
+    * [[parquetSchema]] when the footer settles it: the same relation and
+    * plan, without the one-task job Spark's inference starts. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    parquetSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None         => spark.read.parquet(path)
+    }
+
+  /** The schema `spark.read.parquet(path)` infers, read on the
+    * driver instead of in a Spark job (`mergeSchemasInParallel`). Spark
+    * reads one footer: the `_common_metadata` or `_metadata` summary if
+    * the directory has one, else its first data file by sorted path; it
+    * converts it with the session's binaryAsString, int96AsTimestamp,
+    * inferTimestampNTZ, nanosAsLong and respectUnknownTypeAnnotation
+    * flags. This does the same, and reads the footer again on every call.
+    *
+    * `None` leaves the decision to Spark's own inference, and its error:
+    * a glob, a missing path, a partitioned or nested directory, schema
+    * merging on, no data file, or a footer that does not read or convert. */
+  def parquetSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled || path.exists("{}[]*?\\".contains(_))) return None
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    // Spark's listing skips these names (HadoopFSUtils.shouldFilterOutPathName)
+    def hidden(name: String) =
+      ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")) &&
+      !(name.startsWith("_common_metadata") || name.startsWith("_metadata"))
+    try {
+      val fs = root.getFileSystem(hadoopConf)
+      val leaves =
+        if (!fs.exists(root)) Nil
+        else if (fs.getFileStatus(root).isFile) Seq(fs.getFileStatus(root))
+        else fs.listStatus(root).toSeq.filterNot(f => hidden(f.getPath.getName))
+          .sortBy(_.getPath.toString)
+      val summaries = Seq("_common_metadata", "_metadata")
+      def named(n: String) = leaves.find(_.getPath.getName == n)
+      if (leaves.exists(_.isDirectory)) None
+      else summaries.flatMap(named).headOption
+        .orElse(leaves.find(f => !summaries.contains(f.getPath.getName)))
+        .map { f =>
+          val footer = new Footer(f.getPath, ParquetFooterReader.readFooter(
+            HadoopInputFile.fromStatus(f, hadoopConf), SKIP_ROW_GROUPS))
+          ParquetFileFormat.readSchemaFromFooter(footer, new ParquetToSparkSchemaConverter(
+            assumeBinaryIsString = conf.isParquetBinaryAsString,
+            assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+            inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+            nanosAsLong = conf.legacyParquetNanosAsLong,
+            respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation))
+            .toNullable // as the relation Spark builds reads every column
+        }
+    } catch { case NonFatal(_) => None }
   }
 
   /** Cast every TIMESTAMP_NTZ column to the session-TZ instant type (a

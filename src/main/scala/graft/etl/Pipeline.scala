@@ -122,7 +122,8 @@ object Pipeline {
   /** J2/L3 (main.py:612-628): decorrelated customer-lifetime refresh —
     * completed-order aggregates left-joined back onto customers; absent
     * customers get (0, 0.0) exactly like COUNT/COALESCE(SUM,0) over an
-    * empty correlated set. Snapshot-overwrites the customers table. */
+    * empty correlated set. Replaces the customers table through
+    * [[Sources.replaceTable]]. */
   def updateCustomerTotals(spark: SparkSession, dir: String): Unit = {
     val cust = readOwn(spark, dir, "customers")
       .drop("total_orders", "total_spent")
@@ -132,12 +133,7 @@ object Pipeline {
       .agg(count("order_id").as("total_orders"), sum("total_amount").as("total_spent"))
     val updated = cust.join(aggs, Seq("customer_id"), "left")
       .na.fill(Map("total_orders" -> 0L, "total_spent" -> 0.0))
-    // parquet append/overwrite on the same path within one plan is
-    // unsafe — materialize through a staging snapshot
-    val staged = updated.cache()
-    staged.count()
-    Sources.overwriteTable(staged, dir, "customers")
-    staged.unpersist()
+    Sources.replaceTable(updated, dir, "customers")
   }
 
   /** Analytics over the loaded reference-schema tables: the three

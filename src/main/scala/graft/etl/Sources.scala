@@ -60,16 +60,25 @@ object Sources {
       .map(_.getPath.toString).toSet
   }
 
-  /** Overwrite variant used by the post-load customer-totals refresh
-    * (the reference UPDATEs in place, main.py:618-628; we snapshot). */
-  def overwriteTable(df: DataFrame, dir: String, table: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(s"$dir/$table.parquet")
+  /** Replace a table with a frame that may read it (the reference
+    * UPDATEs in place, main.py:618-628; we snapshot): write the frame to
+    * `<table>.parquet_stage` beside the table, then promote it with
+    * [[publishDir]], which puts the old table back if the promotion
+    * fails. No staging directory is left behind. */
+  def replaceTable(df: DataFrame, dir: String, table: String): Unit = {
+    val fin = java.nio.file.Paths.get(s"$dir/$table.parquet")
+    val stage = fin.resolveSibling(s"$table.parquet_stage")
+    try {
+      df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
+      publishDir(stage, fin)
+    } finally rmTree(stage.toFile)
+  }
 
   def readTable(spark: SparkSession, dir: String, table: String): DataFrame =
-    spark.read.parquet(s"$dir/$table.parquet")
+    graft.Tables.readParquet(spark, s"$dir/$table.parquet")
 
-  /** A table read with its schema declared, which skips the footer
-    * inference job of [[readTable]]. */
+  /** A table read with its schema declared, which skips the footer read
+    * of [[readTable]]. */
   def readTable(spark: SparkSession, dir: String, table: String, schema: StructType): DataFrame =
     spark.read.schema(schema).parquet(s"$dir/$table.parquet")
 
@@ -153,11 +162,7 @@ object Sources {
         tagged.groupBy(col(key)).agg(max(pick).as("__w"))
           .select(cols.map(c => col(s"__w.row.$c").as(c)): _*)
       }
-    // snapshot-overwrite over the path we just read: materialize first
-    val staged = merged.cache()
-    staged.count()
-    overwriteTable(staged, dir, table)
-    staged.unpersist()
+    replaceTable(merged, dir, table)
   }
 
   /** S5 (main.py:532-551): one-row load-audit append. */
@@ -1451,7 +1456,7 @@ object Sources {
       val raw = d.keySchemaJson match {
         case Some(j) => DataType.fromJson(j).asInstanceOf[StructType]
         case None =>
-          val footer = s.read.parquet(d.uri).schema
+          val footer = graft.Tables.readParquet(s, d.uri).schema
           val names = if (d.keys.nonEmpty) d.keys else footer.fieldNames.toSeq
           StructType(names.map(n => footer(n)))
       }

@@ -86,7 +86,9 @@ object Retrieval {
   private val MmrK = 5
 
   /** Postings (doc_id, token, tf) over non-empty whitespace tokens —
-    * the inverted-index frame both x140 stages share. */
+    * the inverted-index frame both x140 stages share. `documents.doc_id`
+    * must be unique: `tokenCounts` counts per row, so a repeated doc_id
+    * would give repeated (doc_id, token) postings. */
   private def postings(s: SparkSession, dir: String): DataFrame =
     // r20 (guide §2.3, profiled): one compiled per-doc counting pass
     // (TokenCounts) replaces explode(tokens)+groupBy(doc,token) — the

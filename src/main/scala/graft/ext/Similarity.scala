@@ -592,7 +592,7 @@ object Similarity {
     * pipelines join against, not a subquery they re-run. */
   private[graft] def semKeepList(s: SparkSession, dir: String): DataFrame =
     Option(publishedKeepLists.get(dir)) match {
-      case Some(p) => s.read.parquet(p.toString)
+      case Some(p) => graft.Tables.readParquet(s, p.toString)
       case None    => buildAndPublishKeepList(s, dir)
     }
 
@@ -605,14 +605,14 @@ object Similarity {
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage.toString)
       // WAP audit before publish: the keep-list carries exactly one row
       // per corpus vector, so a count mismatch means a corrupt write
-      val staged = s.read.parquet(stage.toString).count()
+      val staged = graft.Tables.readParquet(s, stage.toString).count()
       val expected = load(s, dir, "embeddings").count()
       if (staged != expected)
         throw new IllegalStateException(
           s"semdedup keep-list audit failed — staged $staged rows != corpus $expected; publish aborted")
       graft.etl.Sources.publishDir(stage, fin)
       publishedKeepLists.put(dir, fin)
-      s.read.parquet(fin.toString)
+      graft.Tables.readParquet(s, fin.toString)
     }
 
   /** The actual SemDeDup computation (private[graft] so the plan spec

@@ -934,7 +934,12 @@ object TextExpressions {
     * kernels (ASCII-space trim, locale-independent lower — Java
     * String.trim/toLowerCase would silently diverge). Empty text
     * yields the [""] token exactly like the split chain; callers keep
-    * their length>0 filters. */
+    * their length>0 filters.
+    *
+    * Precondition: the row key the caller keeps beside the counts (the
+    * corpus's `doc_id`) must be unique. The counts are per row, so two
+    * rows with one `doc_id` give two (doc, token) rows where the
+    * groupBy chain gave one summed row. */
   case class TokenCounts(child: Expression) extends UnaryExpression {
 
     override def dataType: DataType = ArrayType(StructType(Seq(
@@ -981,7 +986,11 @@ object TextExpressions {
     * the per-doc aggregation happens inside the scan task, so the
     * corpus-mass hash aggregate and the two slice copies + zip-struct
     * allocation per token vanish). Texts with < 2 tokens yield an
-    * empty array, exactly like slice(t, 1, max(size-1, 0)). */
+    * empty array, exactly like slice(t, 1, max(size-1, 0)).
+    *
+    * Precondition: as for [[TokenCounts]], the caller's row key
+    * (`doc_id`) must be unique, or one document's bigrams come out as
+    * several rows instead of one summed row. */
   case class BigramCounts(child: Expression) extends UnaryExpression {
 
     override def dataType: DataType = ArrayType(StructType(Seq(

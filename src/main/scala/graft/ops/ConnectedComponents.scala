@@ -131,14 +131,14 @@ object ConnectedComponents {
       val stage = graft.etl.Sources.scratchPath(s"cc_stage_$key")
       val fin = graft.etl.Sources.scratchPath(s"cc_clusters_$key")
       cc.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage.toString)
-      val staged = s.read.parquet(stage.toString).count()
+      val staged = graft.Tables.readParquet(s, stage.toString).count()
       val expected = docs.count()
       if (staged != expected)
         throw new IllegalStateException(
           s"cluster-table audit failed — staged $staged rows != corpus $expected; publish aborted")
       graft.etl.Sources.publishDir(stage, fin)
       publishedClusters.put(dir, fin)
-      s.read.parquet(fin.toString)
+      graft.Tables.readParquet(s, fin.toString)
     }
 
   /** The cluster table for consumers (x96/x104/x126): the published
@@ -147,7 +147,7 @@ object ConnectedComponents {
     * always rebuilds, so its reported cost stays the build cost. */
   private def docClusters(s: SparkSession, dir: String): DataFrame =
     Option(publishedClusters.get(dir)) match {
-      case Some(p) => s.read.parquet(p.toString)
+      case Some(p) => graft.Tables.readParquet(s, p.toString)
       case None    => buildAndPublishClusters(s, dir)
     }
 

@@ -37,7 +37,7 @@ object EventStreams {
     * file streams need a directory, so stream the parent with a glob
     * filter. */
   def tableStream(spark: SparkSession, dir: String, table: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/$table.parquet").schema
+    val schema = graft.Tables.readParquet(spark, s"$dir/$table.parquet").schema
     spark.readStream.schema(schema)
       .option("pathGlobFilter", s"$table.parquet").parquet(dir)
   }
@@ -572,7 +572,7 @@ object EventStreams {
     val out = sinkReplayRoot.resolve(s"out_$key").toString
     graft.Tables.load(s, dir, "events").repartition(4)
       .write.mode("overwrite").parquet(staged)
-    val schema = s.read.parquet(staged).schema
+    val schema = graft.Tables.readParquet(s, staged).schema
     def deliverAll(): Unit = {
       val ckpt = java.nio.file.Files.createTempDirectory(
         sinkReplayRoot, "ckpt_")
@@ -606,7 +606,7 @@ object EventStreams {
       .select(col("event_type"),
         expr("cast(round(value * 100, 0) as bigint)").as("cents"))
       .repartition(4).write.mode("overwrite").parquet(staged)
-    val schema = s.read.parquet(staged).schema
+    val schema = graft.Tables.readParquet(s, staged).schema
     def partial(df: DataFrame): DataFrame =
       df.groupBy("event_type")
         .agg(count(lit(1)).as("n_events"), sum("cents").as("total_cents"))
@@ -677,7 +677,7 @@ object EventStreams {
       tbl: org.apache.hadoop.fs.Path,
       ckptOverride: Option[java.nio.file.Path] = None,
       crashAfterBatch: Long = -1L): Unit = {
-    val schema = s.read.parquet(staged).schema
+    val schema = graft.Tables.readParquet(s, staged).schema
     val ckpt = ckptOverride.getOrElse(
       java.nio.file.Files.createTempDirectory(sinkReplayRoot, "mor_ckpt_"))
     val stream = s.readStream.schema(schema)

@@ -8,6 +8,13 @@ import org.apache.spark.sql.functions._
   * *invariants* so refactors fail fast locally). */
 class AnalyticsSpec extends SparkSpec {
 
+  test("building every report query starts no Spark job") {
+    val (dfs, jobs) = SparkSpec.jobsStartedBy(spark)(
+      Analytics.queries.toSeq.sortBy(_._1).map { case (name, q) => name -> q(spark, sfDir) })
+    assert(dfs.size == 19)
+    assert(jobs.isEmpty, s"building the report queries started job(s): $jobs")
+  }
+
   test("monthlySales: chronologically ordered, only completed orders counted") {
     val rows = Analytics.monthlySales(spark, sfDir).collect()
     assert(rows.nonEmpty)

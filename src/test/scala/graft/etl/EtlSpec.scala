@@ -187,7 +187,7 @@ class EtlSpec extends SparkSpec {
   test("upsertTable merges by key, newest version wins, ties favor updates") {
     val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString
     val v1 = Seq((1L, "a", 1L), (2L, "b", 1L), (3L, "c", 1L)).toDF("id", "v", "ver")
-    Sources.overwriteTable(v1, dir, "t")
+    Sources.replaceTable(v1, dir, "t")
     val updates = Seq(
       (2L, "b2", 2L),  // newer version → replaces
       (3L, "c2", 1L),  // same version → update side wins
@@ -271,11 +271,18 @@ class EtlSpec extends SparkSpec {
     assert(m.totalRecords == rows.values.map(_.getAs[Long]("records_processed")).sum)
 
     // the reports read every table with its declared schema; it must be
-    // the schema the files carry
+    // the schema the files carry, and the footer read gives Spark's own
     (Pipeline.loadOrder :+ "etl_metadata").foreach { t =>
       def fields(st: org.apache.spark.sql.types.StructType) = st.fields.map(f => f.name -> f.dataType).toSeq
       assert(fields(Pipeline.writtenSchema(spark, t)) == fields(Sources.readTable(spark, out, t).schema), t)
+      val path = s"$out/$t.parquet"
+      assert(graft.Tables.parquetSchema(spark, path).map(_.fields.toSeq) ==
+        Some(spark.read.parquet(path).schema.fields.toSeq), t)
     }
+
+    // the refresh promoted its staged copy and left nothing beside it
+    assert(new java.io.File(out).list().sorted.toSeq ==
+      (Pipeline.loadOrder :+ "etl_metadata").map(t => s"$t.parquet").sorted)
   }
 
   test("pipeline quality equals Quality.profile with duplicates and nulls; a rerun counts only its own rows") {

@@ -94,38 +94,20 @@ class DedupSpec extends SparkSpec {
 
   test("cap-loss reporting is deferred: plan construction runs zero Spark jobs") {
     Dedup.drainCapLossReports() // flush anything registered by earlier tests
-    // spark.read.parquet legitimately runs tiny footer/schema-listing jobs
-    // at construction ("parquet at Tables.scala"); what must NOT run is
-    // the cap-loss aggregate's collect — track job call sites, not counts
-    val collects = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val site = Option(j.properties)
-          .map(_.getProperty("callSite.short", "")).getOrElse("")
-        if (site.contains("collect")) collects.add(site)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // building all four capped near-dup plans must not execute anything
-      // (explain/PlanSpec/bench rely on construction being job-free)
-      val dfs = Seq(
-        Dedup.minhashNearDups(spark, sfDir),
-        Dedup.simhashNearDups(spark, sfDir),
-        Dedup.ngramJaccardNearDups(spark, sfDir),
-        Dedup.embeddingNearDups(spark, sfDir))
-      // listener events are posted asynchronously; a short settle window
-      // is enough for a job-start to surface if one was launched
-      Thread.sleep(500)
-      assert(collects.isEmpty,
-        s"plan construction launched collect job(s): $collects")
-      // drain executes the registered one-row aggregates and empties the
-      // registry; a second drain has nothing left to run
-      dfs.foreach(_.write.format("noop").mode("overwrite").save())
-      Dedup.drainCapLossReports()
-      assert(Dedup.drainCapLossReports().isEmpty)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // building all four capped near-dup plans must not execute anything,
+    // neither the cap-loss aggregate's collect nor a footer read
+    // (explain/PlanSpec/bench rely on construction being job-free)
+    val (dfs, jobs) = graft.SparkSpec.jobsStartedBy(spark)(Seq(
+      Dedup.minhashNearDups(spark, sfDir),
+      Dedup.simhashNearDups(spark, sfDir),
+      Dedup.ngramJaccardNearDups(spark, sfDir),
+      Dedup.embeddingNearDups(spark, sfDir)))
+    assert(jobs.isEmpty, s"plan construction launched job(s): $jobs")
+    // drain executes the registered one-row aggregates and empties the
+    // registry; a second drain has nothing left to run
+    dfs.foreach(_.write.format("noop").mode("overwrite").save())
+    Dedup.drainCapLossReports()
+    assert(Dedup.drainCapLossReports().isEmpty)
   }
 
   test("threshold sweep: bins valid, pair mass at/above tau matches x03's verification") {

@@ -37,6 +37,12 @@ class RetrievalSpec extends SparkSpec {
     11L -> Array(0f, 1f, 0f, 0f),
     12L -> Array(1f, 0f, 1f, 0f))
 
+  test("documents.doc_id is unique, as TokenCounts and BigramCounts require") {
+    val ids = graft.Tables.load(spark, sfDir, "documents").select("doc_id")
+    val n = ids.count()
+    assert(n > 0 && ids.distinct().count() == n)
+  }
+
   test("x140: exact hand-computed BM25 ppm scores and ranking") {
     // N=4, total_tf=10, avgdl=2.5; query terms {apple, banana}, both
     // df=2 so idf=(4-2+0.5)/2.5=1. doc10: tf(apple)=2, dl=3 →
