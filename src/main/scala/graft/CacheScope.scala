@@ -2,17 +2,14 @@ package graft
 
 import org.apache.spark.sql.Dataset
 
-/** Scoped lifetime for query-path caches (round-9/10 verdict: 20
-  * `.cache()` calls, 5 `unpersist`s — every suite invocation leaked the
-  * rest into the shared session, and the leaked blocks measurably
-  * inflated the NEXT query's timing, e.g. x110 at 1.9 s in-suite right
-  * after x109 vs 0.5 s isolated).
+/** Scoped lifetime for query-path caches: a cache left in a shared
+  * session inflates the NEXT query's timing and accretes blocks.
   *
   * The query functions return LAZY frames, so they cannot unpersist
   * their own intermediates — the cache must survive until the caller
   * materializes the result. This registry closes that gap: a query
   * function marks each intermediate with [[ScopedCacheOps.scopedCache]]
-  * instead of `.cache()`, and the CONSUMER (Bench/Verify/specs — or any
+  * instead of `.cache()`, and the CONSUMER ([[Harness.run]] — or any
   * library user, per the contract below) calls [[release]] once the
   * result is consumed. Release is a blocking unpersist, so
   * `sparkContext.getPersistentRDDs` is deterministically empty
@@ -23,17 +20,11 @@ import org.apache.spark.sql.Dataset
   * one-off session (Spark evicts LRU) but leaks cached blocks into
   * long-lived sessions exactly like a missing `unpersist` would.
   * The registry is session-global, sized for ONE consumer at a time
-  * (Bench/Verify/specs are sequential): a release() issued while
+  * (Harness.run callers are sequential): a release() issued while
   * another thread's query is mid-flight unpersists that query's
   * caches too — never wrong results (Spark recomputes), but the work
   * is repaid. Concurrent consumers should serialize their
-  * consume-then-release sections.
-  *
-  * At 100 TB the same discipline holds, with `persist(MEMORY_AND_DISK)`
-  * frames orders of magnitude smaller than the raw text (hash/signature
-  * projections); the scope boundary — one query, then release — is what
-  * keeps a multi-tenant session's block manager from accreting dead
-  * sketches. */
+  * consume-then-release sections. */
 object CacheScope {
   private val live = new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
 

@@ -262,28 +262,18 @@ object Sources {
   /** Best-effort reclaim of every nonce scratch root created so far.
     * A nonce root stays referenced by its query's returned DataFrame
     * until that frame is fully consumed, so this is safe ONLY between
-    * fully-materialized queries in a sequential harness — Bench,
-    * ScaleCheck and Verify call it after each query's sink completes;
-    * without the sweep a 3-rep bench over the manifest queries keeps a
-    * full table copy per rep on disk for the life of the JVM. The
-    * JVM-exit hook on [[roundtripRoot]] stays as the backstop for
-    * every other caller (tests may hold several roots concurrently). */
-  private[graft] def sweepNonceRoots(): Unit = {
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete(); ()
-    }
-    val kids = roundtripRoot.resolve("nonce").toFile.listFiles()
-    if (kids != null) kids.foreach(rm)
-  }
+    * fully-materialized queries run one at a time — [[graft.Harness.run]]
+    * calls it after each query's sink completes; without the sweep a
+    * 3-rep bench over the manifest queries keeps a full table copy per
+    * rep on disk for the life of the JVM. The JVM-exit hook on
+    * [[roundtripRoot]] stays as the backstop for every other caller
+    * (tests may hold several roots concurrently). */
+  private[graft] def sweepNonceRoots(): Unit =
+    Option(roundtripRoot.resolve("nonce").toFile.listFiles()).foreach(_.foreach(rmTree))
 
   private lazy val roundtripRoot: java.nio.file.Path = {
     val p = java.nio.file.Files.createTempDirectory("graft_roundtrip_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete(); ()
-      }
-      rm(p.toFile)
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(p.toFile)))
     p
   }
 

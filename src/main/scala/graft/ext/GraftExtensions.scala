@@ -9,9 +9,7 @@ import graft.functions.{Sketches, TextExpressions, VectorExpressions}
   * standard extension mechanism:
   *
   * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-  *   ...
+  * spark.sql.extensions=graft.ext.GraftExtensions   // graft.Harness.session sets it
   * spark.sql("SELECT graft_dot(a, b), graft_lang_id(text) FROM t")
   * }}}
   *
@@ -34,67 +32,30 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // as an automatic optimization (see HashFirstDistinctRule)
     ext.injectOptimizerRule(_ => graft.plans.HashFirstDistinctRule)
 
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[VectorExpressions.DotProduct].getName, "graft_dot"),
-      (args: Seq[Expression]) => VectorExpressions.DotProduct(args(0), args(1))))
+    // the function's SQL name and its ExpressionInfo name are one value
+    def register(name: String, cls: Class[_])(build: Seq[Expression] => Expression): Unit =
+      ext.injectFunction((new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
 
-    ext.injectFunction((
-      new FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[VectorExpressions.DotProduct].getName, "graft_cosine"),
-      (args: Seq[Expression]) => {
-        // raw catalyst nodes (a Column round-trip would embed unresolved
-        // ColumnNode wrappers that the function injection path never
-        // re-analyzes)
-        import org.apache.spark.sql.catalyst.expressions.{Divide, Multiply, Sqrt}
-        val (a, b) = (args(0), args(1))
-        Divide(VectorExpressions.DotProduct(a, b),
-          Multiply(Sqrt(VectorExpressions.DotProduct(a, a)),
-                   Sqrt(VectorExpressions.DotProduct(b, b))))
-      }))
-
-    ext.injectFunction((
-      new FunctionIdentifier("graft_shingle_hashes"),
-      new ExpressionInfo(classOf[TextExpressions.WordShingleHashes].getName, "graft_shingle_hashes"),
-      (args: Seq[Expression]) =>
-        TextExpressions.WordShingleHashes(args(0), intArg(args(1), "shingle width"))))
-
-    ext.injectFunction((
-      new FunctionIdentifier("graft_lang_id"),
-      new ExpressionInfo(classOf[TextExpressions.LangId].getName, "graft_lang_id"),
-      (args: Seq[Expression]) => TextExpressions.LangId(args(0))))
-
-    ext.injectFunction((
-      new FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[TextExpressions.WordShingleStrings].getName, "graft_shingles"),
-      (args: Seq[Expression]) =>
-        TextExpressions.WordShingleStrings(args(0), intArg(args(1), "shingle width"))))
-
-    ext.injectFunction((
-      new FunctionIdentifier("graft_top_token_share"),
-      new ExpressionInfo(classOf[TextExpressions.TopTokenShare].getName, "graft_top_token_share"),
-      (args: Seq[Expression]) => TextExpressions.TopTokenShare(args(0))))
-
-    ext.injectFunction((
-      new FunctionIdentifier("graft_quality"),
-      new ExpressionInfo(classOf[TextExpressions.QualitySignals].getName, "graft_quality"),
-      (args: Seq[Expression]) => TextExpressions.QualitySignals(args(0))))
-
-    ext.injectFunction((
-      new FunctionIdentifier("graft_fingerprint"),
-      new ExpressionInfo(classOf[TextExpressions.FingerprintSketch].getName, "graft_fingerprint"),
-      (args: Seq[Expression]) => TextExpressions.FingerprintSketch(args(0),
-        intArg(args(1), "gram width"), intArg(args(2), "sketch size"))))
-
-    ext.injectFunction((
-      new FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[VectorExpressions.MinHashSignature].getName, "graft_minhash"),
-      (args: Seq[Expression]) => {
-        import org.apache.spark.sql.graftshim.{toColumn, toExpression}
-        toExpression(Sketches.minhashSignature(
-          toColumn(args(0)), intArg(args(1), "k"),
-          if (args.size > 2) intArg(args(2), "seed").toLong else 42L))
-      }))
+    register("graft_dot", classOf[VectorExpressions.DotProduct])(a =>
+      VectorExpressions.DotProduct(a(0), a(1)))
+    register("graft_cosine", classOf[VectorExpressions.CosineSim])(a =>
+      VectorExpressions.CosineSim(a(0), a(1)))
+    register("graft_shingle_hashes", classOf[TextExpressions.WordShingleHashes])(a =>
+      TextExpressions.WordShingleHashes(a(0), intArg(a(1), "shingle width")))
+    register("graft_lang_id", classOf[TextExpressions.LangId])(a => TextExpressions.LangId(a(0)))
+    register("graft_shingles", classOf[TextExpressions.WordShingleStrings])(a =>
+      TextExpressions.WordShingleStrings(a(0), intArg(a(1), "shingle width")))
+    register("graft_top_token_share", classOf[TextExpressions.TopTokenShare])(a =>
+      TextExpressions.TopTokenShare(a(0)))
+    register("graft_quality", classOf[TextExpressions.QualitySignals])(a =>
+      TextExpressions.QualitySignals(a(0)))
+    register("graft_fingerprint", classOf[TextExpressions.FingerprintSketch])(a =>
+      TextExpressions.FingerprintSketch(a(0), intArg(a(1), "gram width"), intArg(a(2), "sketch size")))
+    register("graft_minhash", classOf[VectorExpressions.MinHashSignature]) { a =>
+      import org.apache.spark.sql.graftshim.{toColumn, toExpression}
+      toExpression(Sketches.minhashSignature(toColumn(a(0)), intArg(a(1), "k"),
+        if (a.size > 2) intArg(a(2), "seed").toLong else 42L))
+    }
   }
 }
 

@@ -177,13 +177,11 @@ object Retrieval {
     * generation on `dir` (Σ per-query n_cand) — the scale-adjudication
     * counter, the [[Similarity.lshCandidateMass]] precedent: the
     * ScaleCheck artifact carries the mass on both slices so the
-    * bounded-nomination claim is measured, not asserted. */
-  private[graft] def bm25CandidateMass(s: SparkSession, dir: String): Long = {
-    val m = bm25RankedWithCand(s, dir, OutK)._2
+    * bounded-nomination claim is measured, not asserted. Leaves scoped
+    * caches for the caller's [[graft.CacheScope.release]]. */
+  private[graft] def bm25CandidateMass(s: SparkSession, dir: String): Long =
+    bm25RankedWithCand(s, dir, OutK)._2
       .agg(coalesce(sum("n_cand"), lit(0L))).head().getLong(0)
-    graft.CacheScope.release()
-    m
-  }
 
   /** x140: BM25 lexical retrieval — top-k candidate docs per query doc
     * (query = the doc's distinct terms), rational-idf variant, exact

@@ -802,14 +802,13 @@ object Similarity {
     * ~probes·√nlist fine cosines (nlist = √N ⇒ N^(1/4) per vector,
     * N^1.25 total BY DESIGN), so x128's scale ratio must track this
     * mass; a ratio beyond it would be plan shape, not data mass.
-    * Releases its own cache scope — safe to call between bench reps. */
-  def semProbeCandidateMass(s: SparkSession, dir: String): Long =
-    try {
-      val nlist = semNlist(s, dir)
-      val (all, centroids) = ivfCentroids(s, dir, nlist, LloydIters, Some(SemTrainSample))
-      semAssignApproxFrame(all, centroids, semNcoarse(nlist))
-        .agg(sum(col("n_cand"))).head().getLong(0)
-    } finally graft.CacheScope.release()
+    * Leaves scoped caches for the caller's [[graft.CacheScope.release]]. */
+  def semProbeCandidateMass(s: SparkSession, dir: String): Long = {
+    val nlist = semNlist(s, dir)
+    val (all, centroids) = ivfCentroids(s, dir, nlist, LloydIters, Some(SemTrainSample))
+    semAssignApproxFrame(all, centroids, semNcoarse(nlist))
+      .agg(sum(col("n_cand"))).head().getLong(0)
+  }
 
   /** x128: the approximate-assignment production path as a standalone
     * deliverable — per-vector (vec_id, cluster) via the hierarchical

@@ -40,10 +40,8 @@ class AdversarialCorpusSpec extends SparkSpec {
 
   test("EVERY registered query tolerates pathological document content (no-throw)") {
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      try { fn(spark, advDir).count(); None }
-      catch { case e: Throwable =>
-        Some(s"$name: ${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString.take(160)}")
-      }
+      val rec = Harness.run(spark, name, fn(spark, advDir), sink = _.count())
+      rec.error.map(e => s"$name: ${e.linesIterator.take(1).mkString.take(160)}")
     }
     assert(failures.isEmpty,
       s"${failures.size} queries throw on pathological content:\n  ${failures.mkString("\n  ")}")

@@ -2,12 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench harness's rep-major degradation policy, tested as pure
-  * logic with a simulated clock (round-11 done-criterion for the
-  * round-9/10 verdict item: deadline pressure must cost REPS roughly
-  * uniformly, never the pass-1 measurement of the lexicographic tail,
-  * and one weather-hit query must not eat the remaining suite's
-  * budget). */
+/** The bench's rep-major degradation policy and its stamp handling,
+  * tested as pure logic with a simulated clock: deadline pressure must
+  * cost reps roughly uniformly, never the pass-1 measurement of the
+  * suite's tail, and one slow query must not eat the remaining budget. */
 class BenchSchedulerSpec extends AnyFunSuite {
 
   /** Drive repMajorLoop with per-query simulated costs; returns
@@ -81,12 +79,11 @@ class BenchSchedulerSpec extends AnyFunSuite {
     assert(runs.values.toSet == Set(3))
   }
 
-  // -- self-selecting outlier adjudication (r17 verdict task 1) --------
+  // -- self-selecting outlier adjudication --------------------------------
 
   test("adjudication selection: a seeded slow stamp IS picked up; jitter and improvements are not") {
     // the committed stamp says x98 ran in 1.02s and x99 in 0.46s; the
-    // suite measured 5.19 / 1.14 — exactly the BENCH_r17 regression the
-    // hand-picked list missed. Both must self-select.
+    // suite measured 5.19 / 1.14. Both must self-select.
     val committed = Map(
       "x98_novelty" -> 1.02, "x99_vocab" -> 0.46,
       "q01_monthly" -> 0.30, "x10_tiny" -> 0.05, "x11_faster" -> 2.0)
@@ -113,9 +110,16 @@ class BenchSchedulerSpec extends AnyFunSuite {
       .toOption.forall(_.isEmpty), "garbage must not select targets")
   }
 
+  test("stamp cpus: a stamp at this run's cpus or without the field is read; other cpus is ignored") {
+    val queries = """"queries":{"q01":0.5}"""
+    assert(Bench.parseStampQueries(s"""{"cpus":4,$queries}""", Some(4)) == Map("q01" -> 0.5))
+    assert(Bench.parseStampQueries(s"""{"cpus":8,$queries}""", Some(4)).isEmpty)
+    assert(Bench.parseStampQueries(s"""{$queries}""", Some(4)) == Map("q01" -> 0.5))
+  }
+
   test("canonical-stamp decision is by filename; repo root resolves from the class location") {
-    // ADVICE r18: './bench_out.json' or an absolute spelling must not
-    // silently flip the canonical stamp into append mode
+    // './bench_out.json' or an absolute spelling must not silently flip
+    // the canonical stamp into append mode
     assert(Bench.isCanonicalStamp("bench_out.json"))
     assert(Bench.isCanonicalStamp("./bench_out.json"))
     assert(Bench.isCanonicalStamp("/anywhere/at/all/bench_out.json"))

@@ -1,12 +1,9 @@
 package graft
 
-/** Round-11 done-criterion for the cache-leak fix (round-9/10 verdict
-  * item: 20 query-path `.cache()` calls, 5 `unpersist`s): after any
-  * leak-site registry query materializes and the consumer calls
-  * [[CacheScope.release]], the session must hold ZERO persisted RDDs —
-  * the blocking unpersist makes this deterministic, so the assertion is
-  * exact, not racy. One query per function that owns a former leak site
-  * (all 17 across Dedup/Similarity/TextAnalysis/Sampling/Contamination). */
+/** After any registry query that caches materializes and the consumer
+  * calls [[CacheScope.release]], the session must hold ZERO new persisted
+  * RDDs — the blocking unpersist makes the assertion exact, not racy. One
+  * query per function that owns a scoped cache. */
 class CacheLifecycleSpec extends SparkSpec {
 
   // one registry query per cache-owning function; together these drive
@@ -29,22 +26,19 @@ class CacheLifecycleSpec extends SparkSpec {
     "x108_importance",            // Sampling.importanceScores
     "x79_split_leakage")          // Contamination.splitLeakage
 
-  // Diff against a pre-query snapshot rather than asserting the global
-  // set empty: the session is shared across the whole sequential test
-  // run, and an EARLIER suite's own persists (e.g. a localCheckpoint)
-  // are not this spec's subject — the contract under test is "a
-  // registry query adds NOTHING that survives its release".
-  private def persistedIds: Set[Int] =
-    spark.sparkContext.getPersistentRDDs.keySet.toSet
-
   test("every leak-site query leaves zero NEW persisted RDDs after release") {
     leakSiteQueries.foreach { name =>
       val before = persistedIds
-      val fn = SparkEntry.queries(name)
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      ext.Dedup.drainCapLossReports()
-      CacheScope.release()
-      val leaked = persistedIds -- before
+      var leaked = Set.empty[Int]
+      // measured inside the sink, before Harness.run's clearCache, which
+      // would also drop a raw .cache() left outside the scope
+      val rec = Harness.run(spark, name, SparkEntry.queries(name)(spark, sfDir), sink = { df =>
+        Harness.noop(df)
+        ext.Dedup.drainCapLossReports()
+        CacheScope.release()
+        leaked = persistedIds -- before
+      })
+      assert(rec.ok, s"$name failed: ${rec.error}")
       assert(leaked.isEmpty,
         s"$name leaked ${leaked.size} persisted RDD(s) after CacheScope.release(): " +
           leaked.mkString(", "))

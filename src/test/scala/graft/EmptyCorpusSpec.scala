@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Empty-corpus edges for the round-8 operators: a production pipeline
+/** Empty-corpus edges: a production pipeline
   * WILL eventually point at an empty partition (fresh day, filtered-out
   * source), and an operator that throws there takes the whole job down.
   * Every driver query must return an empty (or correctly degenerate)
@@ -51,10 +51,8 @@ class EmptyCorpusSpec extends SparkSpec {
     // query. Failures are collected and reported together so one bad
     // operator doesn't mask the rest.
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      try { fn(spark, emptyDir).count(); None }
-      catch { case e: Throwable =>
-        Some(s"$name: ${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString.take(160)}")
-      }
+      val rec = Harness.run(spark, name, fn(spark, emptyDir), sink = _.count())
+      rec.error.map(e => s"$name: ${e.linesIterator.take(1).mkString.take(160)}")
     }
     assert(failures.isEmpty,
       s"${failures.size} queries throw on an empty corpus:\n  ${failures.mkString("\n  ")}")

@@ -2,11 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** r18 verdict task 2: the "every stamp ratio > 5 is adjudicated by a
-  * measured mass family" claim, checked by CODE against the committed
-  * SCALE stamps — not by prose. The membership table is
-  * [[ScaleCheck.MassFamilies]]; each family has an emitter in
-  * ScaleCheck.main that prints its measured mass on both slices. */
+/** The "every stamp ratio > 5 is adjudicated by a measured mass family"
+  * claim, checked by code against the committed SCALE stamps. The table
+  * is [[ScaleCheck.Families]]; each family's adjudication line prints its
+  * measured mass axes on both slices. */
 class ScaleFamilySpec extends AnyFunSuite {
 
   /** Ratios from every scale_ratio_p50 line of a committed stamp
@@ -30,12 +29,27 @@ class ScaleFamilySpec extends AnyFunSuite {
 
   test("every family member is a registered query; no query sits in two families") {
     val registered = SparkEntry.queries.keySet
-    val members = ScaleCheck.MassFamilies.values.flatten.toSeq
+    val members = ScaleCheck.Families.flatMap(_.members)
     val unknown = members.filterNot(registered)
     assert(unknown.isEmpty,
-      s"MassFamilies names unregistered queries (typo or rename): $unknown")
+      s"Families names unregistered queries (typo or rename): $unknown")
     val dups = members.groupBy(identity).collect { case (q, qs) if qs.size > 1 => q }
     assert(dups.isEmpty, s"queries claimed by more than one family: $dups")
+  }
+
+  test("every family has an emitter: a line carrying each of its mass axes on both slices") {
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    ScaleCheck.Families.foreach { f =>
+      val masses = f.masses.map(_ => (100L, 1000L))
+      val retimed = if (f.extraReps > 0) Some((1.0, 10.0)) else None
+      val line = om.readTree(ScaleCheck.adjudicationLine(f, 10, f.members, masses, retimed))
+      assert(f.masses.nonEmpty && line.path("metric").asText == "scale_adjudication", f.name)
+      f.masses.foreach { m =>
+        assert(line.path(s"${m.key}_t1").asLong == 100L && line.path(s"${m.key}_t10").asLong == 1000L,
+          s"${f.name} line lacks ${m.key}: $line")
+        m.ratioKey.foreach(k => assert(line.path(k).asDouble == 10.0, s"${f.name} $k"))
+      }
+    }
   }
 
   test("no stamp ratio above the floor escapes family adjudication (committed stamps)") {

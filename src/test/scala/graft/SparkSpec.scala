@@ -4,33 +4,25 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared single-JVM SparkSession for all specs (local[4], UTC, AQE on —
-  * the same session shape Verify/Bench use, sized for tiny test frames). */
+/** Shared single-JVM SparkSession for all specs: the session Bench and
+  * Verify run on ([[Harness.session]]), at 4 cores for tiny test frames. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSpec.session
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** The session's persisted RDDs. Specs diff it against a snapshot: the
+    * session is shared by the whole run, so an earlier suite's persists
+    * are not the subject of a later one. */
+  def persistedIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Harness.session(4, Map(
+    "spark.app.name" -> "graft-test",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
 
   /** Run `body` and return its value with the call sites of the Spark
     * jobs it started on this thread, told apart by a job group of their

@@ -13,6 +13,18 @@ class GraftExtensionsSpec extends SparkSpec {
       "graft_cosine(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c").collect()(0)
     assert(r.getDouble(0) == 11.0)
     assert(math.abs(r.getDouble(1) - 1.0) < 1e-12)
+    // SQL maps onto the DSL's CosineSim: a zero vector, a null element
+    // and unequal lengths give the same double (NaN for the zero vector)
+    import org.apache.spark.sql.functions.{col, expr}
+    val pairs = spark.sql("SELECT * FROM VALUES (array(0d, 0d), array(1d, 2d)), " +
+      "(array(1d, null), array(1d, 1d)), (array(1d, 2d, 3d), array(1d, 2d)) AS t(a, b)")
+    val got = pairs.select(expr("graft_cosine(a, b)"),
+      graft.functions.Sketches.cosine(col("a"), col("b"))).collect()
+    assert(got.forall(r => java.lang.Double.compare(r.getDouble(0), r.getDouble(1)) == 0),
+      got.mkString(", "))
+    assert(got(0).getDouble(0).isNaN)
+    assert(spark.catalog.getFunction("graft_cosine").className ==
+      classOf[graft.functions.VectorExpressions.CosineSim].getName)
   }
 
   test("graft_shingle_hashes and graft_minhash compose in SQL") {

@@ -9,15 +9,7 @@ object RecallProbe {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
                else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session(8)
     for (dir <- dirs) {
       val exact = Similarity.topKBruteForce(spark, dir)
         .select("query_id", "neighbor_id").collect()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: measure HashFirstDistinctRule's effect — the same
@@ -14,14 +13,9 @@ object HashFirstBench {
     val n = if (args.nonEmpty) args(0).toLong else 200000L
 
     def run(label: String, withRule: Boolean): Unit = {
-      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-      val b = SparkSession.builder().master("local[8]")
-        .appName(s"hashfirst-$label")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-      val s = (if (withRule) b.config("spark.sql.extensions", "graft.ext.GraftExtensions")
-               else b).getOrCreate()
-      s.sparkContext.setLogLevel("ERROR")
+      // the control side is stock Spark: no extensions, so no rule
+      val s = graft.Harness.session(8, Map("spark.app.name" -> s"hashfirst-$label") ++
+        (if (withRule) Map.empty else Map("spark.sql.extensions" -> "")))
       val bytes = new java.util.concurrent.atomic.AtomicLong()
       s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onStageCompleted(

@@ -1,30 +1,70 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{Harness, SparkEntry}
 
-/** Dev profiler for the optimization rounds:
-  * `Test/runMain graft.tools.ProfileQuery <query> [sfDir] [cpus]`
-  * runs one SparkEntry query (noop sink) with a listener that records
-  * every job's wall-clock, task-time sum, and first-stage name, printing
-  * a per-job breakdown — shows WHERE a many-job query (publish paths,
-  * streaming replays, iterative builds) spends its time, which the
-  * per-query bench total cannot. */
+/** Dev profiler for SparkEntry queries, one session per call:
+  *
+  *  - `Test/runMain graft.tools.ProfileQuery <query> [sfDir] [cpus]` runs
+  *    the query twice (a warm rep, then the profiled rep) with a listener
+  *    that records every job's wall-clock, task-time sum and first-stage
+  *    name, and a stack sampler on the driver thread; it prints a per-job
+  *    breakdown — WHERE a many-job query (publish paths, streaming
+  *    replays, iterative builds) spends its time, which the per-query
+  *    bench total cannot show.
+  *  - `--explain <q1,q2,...|all> [sfDir] [cpus]` prints, per query, the
+  *    formatted plan before execution and the AQE-final executed plan.
+  *  - `--dump <outDir> <suffix> <q1,q2,...|all> [sfDir] [cpus]` writes the
+  *    same text to `<outDir>/<query>_<suffix>.txt` per query, so exchange
+  *    counts, join strategies and pushed filters are checkable offline.
+  */
 object ProfileQuery {
-  def main(args: Array[String]): Unit = {
+  def main(argv: Array[String]): Unit = {
+    val (mode, args) = argv.toList match {
+      case "--explain" :: rest => ("explain", rest.toArray)
+      case "--dump" :: _ :: _ :: rest => ("dump", rest.toArray)
+      case _ => ("profile", argv)
+    }
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val cpus = if (args.length > 2) args(2) else "32"
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(cpus.toInt)
+    if (mode == "profile") profile(spark, name, dir)
+    else {
+      val names =
+        if (name == "all") SparkEntry.queries.keys.toSeq.sorted
+        else name.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      names.foreach { q =>
+        var text = ""
+        val rec = Harness.run(spark, q, SparkEntry.queries(q)(spark, dir), sink = df => text = plans(df))
+        if (!rec.ok) text = s"FAILED: ${rec.error.getOrElse("")}\n"
+        if (mode == "explain") print(text)
+        else {
+          val outDir = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(argv(1)))
+          java.nio.file.Files.writeString(outDir.resolve(s"${q}_${argv(2)}.txt"), text)
+          println(s"dumped $q")
+        }
+      }
+    }
+    spark.stop()
+  }
 
+  /** The formatted plan before execution, and the executed plan after
+    * driving this very QueryExecution, so its adaptive plan is final and
+    * shows the runtime join strategies (a separate write would finalize
+    * a different QueryExecution). */
+  private def plans(df: DataFrame): String = {
+    val qe = df.queryExecution
+    val formatted = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("plans")) {
+      qe.toRdd.foreachPartition(it => while (it.hasNext) it.next())
+    }
+    s"== Formatted (pre-execution) ==\n$formatted\n\n== Executed (AQE-final) ==\n${qe.executedPlan}\n"
+  }
+
+  private def profile(spark: SparkSession, name: String, dir: String): Unit = {
+    import scala.jdk.CollectionConverters._
     case class Job(id: Int, desc: String, start: Long,
                    var end: Long = -1L, var taskMs: Long = 0L, var nTasks: Int = 0)
     case class Stage(id: Int, name: String, details: String,
@@ -34,10 +74,13 @@ object ProfileQuery {
     val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .orElse(Option(e.properties)
-            .flatMap(p => Option(p.getProperty("callSite.short"))))
+        // Harness.run describes every job by its group (the query name),
+        // so only a description set inside the query says more
+        val props = Option(e.properties)
+        val desc = props
+          .flatMap(p => Option(p.getProperty("spark.job.description"))
+            .filterNot(_ == p.getProperty("spark.jobGroup.id")))
+          .orElse(props.flatMap(p => Option(p.getProperty("callSite.short"))))
           .getOrElse(e.stageInfos.map(_.name).mkString(" | ").take(160))
         jobs.put(e.jobId, Job(e.jobId, desc, e.time))
         e.stageIds.foreach(s => stageToJob.put(s, e.jobId))
@@ -94,26 +137,18 @@ object ProfileQuery {
 
     // one warm rep first (JIT/codegen), then the profiled rep
     val reps = 2
-    var t0 = 0L
     (1 to reps).foreach { r =>
       jobs.clear(); stages.clear(); stageToJob.clear(); samples.clear()
       sampling = r == reps
-      t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      sampling = false
-      graft.CacheScope.release(); spark.catalog.clearCache()
-      graft.etl.Sources.sweepNonceRoots()
-      println(f"rep $r: $dt%.2f s")
+      val rec = Harness.run(spark, name, SparkEntry.queries(name)(spark, dir),
+        sink = df => try Harness.noop(df) finally sampling = false)
+      println(f"rep $r: ${rec.seconds}%.2f s" + rec.error.fold("")(e => s" FAILED: $e"))
     }
     println("main-thread samples (20ms) during final rep, top frames:")
-    import scala.jdk.CollectionConverters._
     samples.asScala.toSeq.sortBy(-_._2).take(25).foreach { case (k, n) =>
       println(f"  $n%5d  $k")
     }
     Thread.sleep(1500) // let the async listener bus drain
-    import scala.jdk.CollectionConverters._
     val js = jobs.values.asScala.toSeq.sortBy(_.start)
     val runStart = js.headOption.map(_.start).getOrElse(0L)
     println(f"%%8s %%9s %%9s %%9s %%6s  desc")
@@ -132,6 +167,5 @@ object ProfileQuery {
     stages.values.asScala.toSeq.sortBy(-_.taskMs).take(20).foreach { s =>
       println(f"  ${s.id}%6d ${s.taskMs}%8d ${s.nTasks}%5d  ${s.details}")
     }
-    spark.stop()
   }
 }
