@@ -5,16 +5,22 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import graft.functions.{Sketches, TextExpressions, VectorExpressions}
 
-/** SQL surface for the engine's custom expressions, installed via the
-  * standard extension mechanism:
+/** The engine's session extension, installed via the standard mechanism:
   *
   * {{{
   * spark.sql.extensions=graft.ext.GraftExtensions   // graft.Harness.session sets it
   * spark.sql("SELECT graft_dot(a, b), graft_lang_id(text) FROM t")
   * }}}
   *
-  * Each function maps 1:1 onto the codegen expressions in
-  * graft.functions — DataFrame DSL users call those directly.
+  * It injects:
+  *  - the SQL surface of the custom expressions: each function maps 1:1
+  *    onto the codegen expressions in graft.functions, which DataFrame DSL
+  *    users call directly;
+  *  - the `AsOfJoinStrategy` planner strategy;
+  *  - the `HashFirstDistinctRule` optimizer rule;
+  *  - the `SmallInputSinglePartition` pre-CBO rule, which plans a file
+  *    input under `spark.sql.files.openCostInBytes` as one partition, so
+  *    the aggregates, joins and sorts above it need no exchange.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -31,6 +37,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // hash-first COUNT(DISTINCT <string>) — the x01 identity contract
     // as an automatic optimization (see HashFirstDistinctRule)
     ext.injectOptimizerRule(_ => graft.plans.HashFirstDistinctRule)
+
+    // one-partition plans for small file inputs (see SmallInputSinglePartition)
+    ext.injectPreCBORule(_ => graft.plans.SmallInputSinglePartition)
 
     // the function's SQL name and its ExpressionInfo name are one value
     def register(name: String, cls: Class[_])(build: Seq[Expression] => Expression): Unit =

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.load
 
@@ -130,8 +130,11 @@ object ConnectedComponents {
       val key = graft.etl.Sources.dirKey(dir)
       val stage = graft.etl.Sources.scratchPath(s"cc_stage_$key")
       val fin = graft.etl.Sources.scratchPath(s"cc_clusters_$key")
-      cc.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage.toString)
-      val staged = graft.Tables.readParquet(s, stage.toString).count()
+      // the staged row count is observed on the write itself: no read-back
+      val written = Observation()
+      cc.observe(written, count(lit(1)).as("rows"))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage.toString)
+      val staged = written.get("rows").asInstanceOf[Long]
       val expected = docs.count()
       if (staged != expected)
         throw new IllegalStateException(

@@ -51,6 +51,7 @@ object ScaleCheck {
     "x06_dedup_embedding",
     "x14_text_fingerprints",
     "x17_events_sessionize",
+    "x08_sim_topk_lsh",
     "x28_sim_topk_ivf",
     "x29_events_asof_native",
     "x34_contamination",

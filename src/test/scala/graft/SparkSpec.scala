@@ -16,6 +16,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * session is shared by the whole run, so an earlier suite's persists
     * are not the subject of a later one. */
   def persistedIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Run `body` with every file input planned by its splits: small inputs
+    * otherwise plan as one partition with no exchanges above them
+    * (`graft.plans.SmallInputSinglePartition`), which hides the exchange
+    * layout a plan would have at scale. */
+  def withPartitionedInputs[T](body: => T): T = {
+    val key = "spark.sql.files.openCostInBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "0")
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
 
 object SparkSpec {

@@ -107,7 +107,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("exact dedup shuffles on the content hash, never the text payload") {
-    val p = plan(graft.ext.Dedup.exactDedup(spark, sfDir))
+    val p = withPartitionedInputs(plan(graft.ext.Dedup.exactDedup(spark, sfDir)))
     val exchanges = p.linesIterator.filter(_.contains("hashpartitioning")).toSeq
     assert(exchanges.nonEmpty, s"no exchange found:\n$p")
     assert(!exchanges.exists(_.contains("text#")),

@@ -1,6 +1,8 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.{Harness, SparkEntry}
 
@@ -9,7 +11,8 @@ import graft.{Harness, SparkEntry}
   *  - `Test/runMain graft.tools.ProfileQuery <query> [sfDir] [cpus]` runs
   *    the query twice (a warm rep, then the profiled rep) with a listener
   *    that records every job's wall-clock, task-time sum and first-stage
-  *    name, and a stack sampler on the driver thread; it prints a per-job
+  *    name, and a stack sampler on the driver thread; it prints each
+  *    rep's Janino compile count and compile ms, and a per-job
   *    breakdown — WHERE a many-job query (publish paths, streaming
   *    replays, iterative builds) spends its time, which the per-query
   *    bench total cannot show.
@@ -135,14 +138,22 @@ object ProfileQuery {
     })
     sampler.setDaemon(true); sampler.start()
 
+    // Janino compiles so far in this JVM (driver and local executors
+    // share the codegen cache): count, and total compile time in ms
+    def compiles: (Long, Double) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      CodeGenerator.compileTime / 1e6)
+
     // one warm rep first (JIT/codegen), then the profiled rep
     val reps = 2
     (1 to reps).foreach { r =>
       jobs.clear(); stages.clear(); stageToJob.clear(); samples.clear()
       sampling = r == reps
+      val (n0, ms0) = compiles
       val rec = Harness.run(spark, name, SparkEntry.queries(name)(spark, dir),
         sink = df => try Harness.noop(df) finally sampling = false)
-      println(f"rep $r: ${rec.seconds}%.2f s" + rec.error.fold("")(e => s" FAILED: $e"))
+      val (n1, ms1) = compiles
+      println(f"rep $r: ${rec.seconds}%.2f s, ${n1 - n0}%d janino compiles (${ms1 - ms0}%.0f ms)" +
+        rec.error.fold("")(e => s" FAILED: $e"))
     }
     println("main-thread samples (20ms) during final rep, top frames:")
     samples.asScala.toSeq.sortBy(-_._2).take(25).foreach { case (k, n) =>
