@@ -296,7 +296,7 @@ object Dedup {
     // up to 4×. At cluster scale this is persist(MEMORY_AND_DISK) on a
     // frame of (id, hashes) — tiny next to the raw text.
     val docs = load(s, dir, "documents")
-      .select(col("doc_id"), portableShingleHashes(col("text"), 3).as("shingles"))
+      .select(col("doc_id"), shingleHashes(col("text"), 3).as("shingles"))
       .withColumn("setkey", xxhash64(array_sort(col("shingles"))))
       .scopedCache()
     val sigs = docs.select(col("doc_id"), col("setkey"), col("shingles"),
@@ -538,8 +538,7 @@ object Dedup {
   def simhashNearDups(s: SparkSession, dir: String): DataFrame = {
     // portable 60-bit simhash (md5-prefix token hashes, 4×15-bit bands):
     // the whole pipeline is shift/mask/bit_count arithmetic the DuckDB
-    // oracle reproduces verbatim; swap simhashPortable→simhash64 (and
-    // the band fn) for the 64-bit Spark-internal-hash variant
+    // oracle reproduces verbatim
     val docs = load(s, dir, "documents")
       .select(col("doc_id"), simhashPortable(tokens(col("text"))).as("sim"))
       .scopedCache()
@@ -598,7 +597,7 @@ object Dedup {
     // md5 of the 4 smallest, decimal-joined) so the DuckDB oracle
     // rebuilds blocking and verification exactly
     val docs = load(s, dir, "documents")
-      .select(col("doc_id"), portableShingleHashes(col("text"), 2).as("grams"))
+      .select(col("doc_id"), shingleHashes(col("text"), 2).as("grams"))
       .withColumn("setkey", xxhash64(array_sort(col("grams"))))
       .withColumn("block", md5(concat_ws(",",
         transform(slice(array_sort(col("grams")), 1, 4), x => x.cast("string")))))
@@ -799,7 +798,7 @@ object Dedup {
       s"($b, [${row.mkString(", ")}])" }.mkString(", ")
 
   /** Shared oracle SQL: per-doc sorted portable gram-hash sets for
-    * word n-grams (mirrors portableShingleHashes + array_sort).
+    * word n-grams (mirrors shingleHashes + array_sort).
     * Emits CTEs `sets(doc_id, hs, setkey)`. */
   private def gramSetsSql(n: Int): String = s"""
       toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t

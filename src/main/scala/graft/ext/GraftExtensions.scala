@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GetStructField, Literal}
 import graft.functions.{Sketches, TextExpressions, VectorExpressions}
 
 /** The engine's session extension, installed via the standard mechanism:
@@ -13,9 +13,9 @@ import graft.functions.{Sketches, TextExpressions, VectorExpressions}
   * }}}
   *
   * It injects:
-  *  - the SQL surface of the custom expressions: each function maps 1:1
-  *    onto the codegen expressions in graft.functions, which DataFrame DSL
-  *    users call directly;
+  *  - the SQL surface of the custom expressions: each function maps
+  *    onto the codegen expression in graft.functions that DataFrame DSL
+  *    users call (graft_top_token_share onto a field of RepetitionStats);
   *  - the `AsOfJoinStrategy` planner strategy;
   *  - the `HashFirstDistinctRule` optimizer rule;
   *  - the `SmallInputSinglePartition` pre-CBO rule, which plans a file
@@ -49,13 +49,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       VectorExpressions.DotProduct(a(0), a(1)))
     register("graft_cosine", classOf[VectorExpressions.CosineSim])(a =>
       VectorExpressions.CosineSim(a(0), a(1)))
-    register("graft_shingle_hashes", classOf[TextExpressions.WordShingleHashes])(a =>
-      TextExpressions.WordShingleHashes(a(0), intArg(a(1), "shingle width")))
+    register("graft_shingle_hashes", classOf[TextExpressions.WordShinglePortableHashes])(a =>
+      TextExpressions.WordShinglePortableHashes(a(0), intArg(a(1), "shingle width")))
     register("graft_lang_id", classOf[TextExpressions.LangId])(a => TextExpressions.LangId(a(0)))
     register("graft_shingles", classOf[TextExpressions.WordShingleStrings])(a =>
       TextExpressions.WordShingleStrings(a(0), intArg(a(1), "shingle width")))
-    register("graft_top_token_share", classOf[TextExpressions.TopTokenShare])(a =>
-      TextExpressions.TopTokenShare(a(0)))
+    register("graft_top_token_share", classOf[TextExpressions.RepetitionStats])(a =>
+      GetStructField(TextExpressions.RepetitionStats(a(0)), 2, Some("top_token_ratio")))
     register("graft_quality", classOf[TextExpressions.QualitySignals])(a =>
       TextExpressions.QualitySignals(a(0)))
     register("graft_fingerprint", classOf[TextExpressions.FingerprintSketch])(a =>

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{BooleanType, DataType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
@@ -29,7 +28,7 @@ import org.apache.spark.util.sketch.BloomFilter
 object BloomProbe {
 
   case class BloomMightContain(child: Expression, bits: Array[Byte])
-      extends UnaryExpression {
+      extends UnaryCallback {
 
     override def dataType: DataType = BooleanType
 
@@ -37,12 +36,6 @@ object BloomProbe {
       * the probe is ~two xxhash calls + word reads). */
     @transient private lazy val filter: BloomFilter =
       BloomFilter.readFrom(new java.io.ByteArrayInputStream(bits))
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("bloomProbe", this, classOf[BloomMightContain].getName)
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = ((java.lang.Boolean) $ref.nullSafeEval($v)).booleanValue();")
-    }
 
     override def nullSafeEval(v: Any): Any = {
       val s = v.asInstanceOf[UTF8String]

@@ -123,10 +123,6 @@ object Sketches {
                transform(slice(bits, b * bitsPerBand + 1, lit(bitsPerBand)),
                  x => x.cast("string"))).as("key")))
 
-  /** 64-bit SimHash of a token array: per-bit majority vote of token
-    * hashes (native expression — see TextExpressions.SimHash64). */
-  def simhash64(tokens: Column): Column = TextExpressions.simHash64(tokens)
-
   /** Engine-portable 60-bit SimHash (md5-prefix token hashes) — see
     * TextExpressions.SimHashPortable. Pair with
     * [[simhashPortableBandKeys]]. */

@@ -1,114 +1,88 @@
 package graft.functions
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.functions.VectorExpressions.Md5Prefix60
+
 /** Single-pass compiled expressions for the text hot paths. The Column
   * HOF formulations in [[TextFunctions]] re-tokenize per derived value
-  * (langId alone splits the text 10×); these tokenize ONCE per row in
-  * compiled JVM code (CodegenFallback — the loop itself is compiled,
-  * only the expression boundary is interpreted).
+  * (langId alone splits the text 10×) and evaluate their lambdas
+  * interpreted; these kernels tokenize ONCE per row through [[tokens]]
+  * in compiled Scala. Their generated code is one callback into
+  * `nullSafeEval` ([[UnaryCallback]]), so the hosting Project stays
+  * inside whole-stage codegen.
   */
 object TextExpressions {
 
-  /** xxhash64 of each distinct word n-gram, bit-identical to
-    * `transform(array_distinct(shingles), xxhash64)` in
-    * [[TextFunctions.shingleHashes]]: same tokenization
-    * (split(lower(trim(text)), "\\s+")), same seed-42 XXH64 over UTF-8
-    * bytes, same ≤1-shingle behavior for short docs. */
-  case class WordShingleHashes(child: Expression, n: Int)
-      extends UnaryExpression {
+  private val Whitespace = java.util.regex.Pattern.compile("\\s+")
 
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  /** The tokens of `split(lower(trim(text)), "\\s+")`, the Column form
+    * every kernel here matches bit for bit (and the DuckDB oracles with
+    * it):
+    *  - `UTF8String.trim` is Spark's trim(): it strips ASCII spaces only,
+    *    where Java's String.trim also strips \t and \n;
+    *  - `UTF8String.toLowerCase` is Spark's lower(): locale-independent,
+    *    where Java's String.toLowerCase follows the JVM locale (Turkish
+    *    'I' → 'ı');
+    *  - Java's `\s` is [ \t\n\x0B\f\r], ASCII only: NBSP, U+2003, U+3000
+    *    and U+0085 are token characters, not separators;
+    *  - limit −1 keeps leading and trailing empty tokens, so "\ta" gives
+    *    ["", "a"] and "" gives [""].
+    * The pattern is compiled once: `String.split` takes its no-regex fast
+    * path only for one-character patterns and compiles `\s+` per call. */
+  def tokens(u: UTF8String): Array[String] = Whitespace.split(u.trim.toLowerCase.toString, -1)
 
-    /** Generated code calls back into the compiled `nullSafeEval` via a
-      * reference object — one virtual call per row, but the hosting
-      * Project STAYS inside whole-stage codegen (a CodegenFallback
-      * expression would evict the whole operator). */
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("shingleExpr", this, classOf[WordShingleHashes].getName)
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($v);")
+  /** Java regex `\s` on one codepoint: [ \t\n\x0B\f\r], ASCII only. */
+  private def isWs(cp: Int): Boolean =
+    cp == ' ' || cp == '\t' || cp == '\n' || cp == 0x0b || cp == '\f' || cp == '\r'
+
+  /** `length(regexp_replace(s, "\\s", ""))`: the codepoints of `s` that
+    * are not [[isWs]]. */
+  private def nonWsCount(s: String): Int = {
+    var n = 0
+    var i = 0
+    while (i < s.length) {
+      val cp = s.codePointAt(i)
+      if (!isWs(cp)) n += 1
+      i += Character.charCount(cp)
     }
-
-    override def nullSafeEval(v: Any): Any = {
-      // UTF8String.trim/toLowerCase: Spark's own trim() (ASCII space
-      // only) and lower() (locale-independent) semantics — Java
-      // String.trim also strips \t/\n, and String.toLowerCase follows
-      // the JVM default locale (Turkish 'I'→'ı'), either of which
-      // silently diverges from the Column forms and DuckDB oracles
-      val toks = v.asInstanceOf[UTF8String].trim.toLowerCase.toString
-        .split("\\s+", -1)
-      val count = math.max(toks.length - n, 0) + 1
-      val seen = new java.util.LinkedHashSet[String](count * 2)
-      var i = 0
-      while (i < count) {
-        val end = math.min(i + n, toks.length)
-        seen.add(String.join(" ", java.util.Arrays.asList(toks.slice(i, end): _*)))
-        i += 1
-      }
-      val out = new Array[Long](seen.size)
-      val it = seen.iterator()
-      var j = 0
-      while (it.hasNext) {
-        val s = UTF8String.fromString(it.next())
-        out(j) = org.apache.spark.sql.catalyst.expressions.XXH64
-          .hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
-        j += 1
-      }
-      new GenericArrayData(out)
-    }
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
+    n
   }
+
+  /** The max(len − n, 0) + 1 windows of n consecutive tokens, each joined
+    * by one space, in token order; fewer than n tokens give one gram of
+    * all of them. The grams of [[TextFunctions.wordShingles]] before its
+    * `array_distinct`. */
+  private def grams(toks: Array[String], n: Int): Array[String] = {
+    val list = java.util.Arrays.asList(toks: _*)
+    Array.tabulate(math.max(toks.length - n, 0) + 1)(i =>
+      String.join(" ", list.subList(i, math.min(i + n, toks.length))))
+  }
+
+  /** [[grams]] without repeats, in first-seen order (`array_distinct`'s). */
+  private def distinctGrams(toks: Array[String], n: Int): Array[String] =
+    new java.util.LinkedHashSet[String](java.util.Arrays.asList(grams(toks, n): _*))
+      .toArray(new Array[String](0))
 
   /** The distinct word n-grams themselves (strings), bit-identical to
     * [[TextFunctions.wordShingles]] but one compiled pass: tokenize once,
     * build each gram once, no interpreted HOF lambda per element. Used
     * where the gram must survive as a join key an external engine can
-    * reproduce (e.g. decontamination); prefer [[WordShingleHashes]] when
-    * only identity matters. */
-  case class WordShingleStrings(child: Expression, n: Int)
-      extends UnaryExpression {
+    * reproduce (e.g. decontamination); prefer [[WordShinglePortableHashes]]
+    * when only identity matters. */
+  case class WordShingleStrings(child: Expression, n: Int) extends UnaryCallback {
 
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("shingleStrExpr", this, classOf[WordShingleStrings].getName)
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($v);")
-    }
-
-    override def nullSafeEval(v: Any): Any = {
-      // UTF8String.trim/toLowerCase: Spark's own trim() (ASCII space
-      // only) and lower() (locale-independent) semantics — Java
-      // String.trim also strips \t/\n, and String.toLowerCase follows
-      // the JVM default locale (Turkish 'I'→'ı'), either of which
-      // silently diverges from the Column forms and DuckDB oracles
-      val toks = v.asInstanceOf[UTF8String].trim.toLowerCase.toString
-        .split("\\s+", -1)
-      val count = math.max(toks.length - n, 0) + 1
-      val seen = new java.util.LinkedHashSet[String](count * 2)
-      var i = 0
-      while (i < count) {
-        val end = math.min(i + n, toks.length)
-        seen.add(String.join(" ", java.util.Arrays.asList(toks.slice(i, end): _*)))
-        i += 1
-      }
-      val out = new Array[AnyRef](seen.size)
-      val it = seen.iterator()
-      var j = 0
-      while (it.hasNext) {
-        out(j) = UTF8String.fromString(it.next())
-        j += 1
-      }
-      new GenericArrayData(out)
-    }
+    override def nullSafeEval(v: Any): Any =
+      new GenericArrayData(distinctGrams(tokens(v.asInstanceOf[UTF8String]), n)
+        .map[Any](UTF8String.fromString))
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -121,35 +95,16 @@ object TextExpressions {
     * span-cover operators that need to know WHERE a gram sits (e.g.
     * boilerplate masking), where the distinct variants only answer
     * whether it occurs. */
-  case class WordShinglePositional(child: Expression, n: Int)
-      extends UnaryExpression {
+  case class WordShinglePositional(child: Expression, n: Int) extends UnaryCallback {
 
     override def dataType: DataType = ArrayType(StructType(Seq(
       StructField("pos", IntegerType, nullable = false),
       StructField("gram", StringType, nullable = false))), containsNull = false)
 
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("shinglePosExpr", this, classOf[WordShinglePositional].getName)
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($v);")
-    }
-
     override def nullSafeEval(v: Any): Any = {
-      // UTF8String.trim/toLowerCase — Spark's own trim/lower semantics
-      // (see WordShingleHashes for why Java String's versions diverge)
-      val toks = v.asInstanceOf[UTF8String].trim.toLowerCase.toString
-        .split("\\s+", -1)
-      val count = math.max(toks.length - n, 0) + 1
-      val out = new Array[Any](count)
-      var i = 0
-      while (i < count) {
-        val end = math.min(i + n, toks.length)
-        val gram = String.join(" ", java.util.Arrays.asList(toks.slice(i, end): _*))
-        out(i) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](i, UTF8String.fromString(gram)))
-        i += 1
-      }
-      new GenericArrayData(out)
+      val gs = grams(tokens(v.asInstanceOf[UTF8String]), n)
+      new GenericArrayData(Array.tabulate[Any](gs.length)(i =>
+        new GenericInternalRow(Array[Any](i, UTF8String.fromString(gs(i))))))
     }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -163,63 +118,15 @@ object TextExpressions {
     * external oracle can rebuild the selection (xxhash64 seeds are
     * Spark-internal and cannot). One compiled pass per row: tokenize,
     * build grams, digest, keep the k smallest — scan speed, no shuffle. */
-  case class FingerprintSketch(child: Expression, n: Int, k: Int)
-      extends UnaryExpression {
+  case class FingerprintSketch(child: Expression, n: Int, k: Int) extends UnaryCallback {
 
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("fingerprintExpr", this, classOf[FingerprintSketch].getName)
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($v);")
-    }
-
-    @transient private lazy val md5 =
-      new ThreadLocal[java.security.MessageDigest] {
-        override def initialValue(): java.security.MessageDigest =
-          java.security.MessageDigest.getInstance("MD5")
-      }
-
-    private def hex(bytes: Array[Byte]): String = {
-      val sb = new java.lang.StringBuilder(bytes.length * 2)
-      var i = 0
-      while (i < bytes.length) {
-        sb.append(Character.forDigit((bytes(i) >> 4) & 0xf, 16))
-        sb.append(Character.forDigit(bytes(i) & 0xf, 16))
-        i += 1
-      }
-      sb.toString
-    }
-
     override def nullSafeEval(v: Any): Any = {
-      // UTF8String.trim/toLowerCase: Spark's own trim() (ASCII space
-      // only) and lower() (locale-independent) semantics — Java
-      // String.trim also strips \t/\n, and String.toLowerCase follows
-      // the JVM default locale (Turkish 'I'→'ı'), either of which
-      // silently diverges from the Column forms and DuckDB oracles
-      val toks = v.asInstanceOf[UTF8String].trim.toLowerCase.toString
-        .split("\\s+", -1)
-      val count = math.max(toks.length - n, 0) + 1
-      val seen = new java.util.LinkedHashSet[String](count * 2)
-      var i = 0
-      while (i < count) {
-        val end = math.min(i + n, toks.length)
-        seen.add(String.join(" ", java.util.Arrays.asList(toks.slice(i, end): _*)))
-        i += 1
-      }
-      val digest = md5.get()
-      val hashes = new java.util.ArrayList[String](seen.size)
-      val it = seen.iterator()
-      while (it.hasNext) {
-        digest.reset()
-        hashes.add(hex(digest.digest(it.next().getBytes(java.nio.charset.StandardCharsets.UTF_8))))
-      }
-      java.util.Collections.sort(hashes)
-      val m = math.min(k, hashes.size)
-      val out = new Array[AnyRef](m)
-      var j = 0
-      while (j < m) { out(j) = UTF8String.fromString(hashes.get(j)); j += 1 }
-      new GenericArrayData(out)
+      val hex = java.util.HexFormat.of() // lowercase, as md5() prints it
+      val hashes = distinctGrams(tokens(v.asInstanceOf[UTF8String]), n)
+        .map(g => hex.formatHex(Md5Prefix60.md5(g.getBytes(UTF_8)))).sorted
+      new GenericArrayData(hashes.take(k).map[Any](UTF8String.fromString))
     }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -227,64 +134,18 @@ object TextExpressions {
   }
 
   /** Portable 60-bit hash of each distinct word n-gram: the first 15 hex
-    * chars of the gram's MD5, parsed as a long. Same shingling as
-    * [[WordShingleHashes]] (tokenize once, LinkedHashSet-distinct), but
-    * the hash is reproducible in ANY engine — md5 + hex prefix + integer
+    * chars of the gram's MD5, parsed as a long ([[Md5Prefix60.hash]]).
+    * The hash is reproducible in ANY engine — md5 + hex prefix + integer
     * parse — which is what lets DuckDB rebuild the entire
-    * MinHash/LSH/Jaccard pipeline for the correctness gate (xxhash64's
-    * seed/spec is Spark-internal). 60 bits stays positive in a signed
-    * 64-bit int in every engine. Production deployments that don't need
-    * an external oracle swap back to [[WordShingleHashes]] in one line —
-    * every downstream shape (signature, banding, caps, verify) is
-    * hash-agnostic. */
-  case class WordShinglePortableHashes(child: Expression, n: Int)
-      extends UnaryExpression {
+    * MinHash/LSH/Jaccard pipeline for the correctness gate. 60 bits stays
+    * positive in a signed 64-bit int in every engine. */
+  case class WordShinglePortableHashes(child: Expression, n: Int) extends UnaryCallback {
 
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("shinglePortExpr", this, classOf[WordShinglePortableHashes].getName)
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($v);")
-    }
-
-    @transient private lazy val md5 =
-      new ThreadLocal[java.security.MessageDigest] {
-        override def initialValue(): java.security.MessageDigest =
-          java.security.MessageDigest.getInstance("MD5")
-      }
-
-    override def nullSafeEval(v: Any): Any = {
-      // UTF8String.trim/toLowerCase — Spark's own trim/lower semantics
-      // (see WordShingleHashes for why Java String's versions diverge)
-      val toks = v.asInstanceOf[UTF8String].trim.toLowerCase.toString
-        .split("\\s+", -1)
-      val count = math.max(toks.length - n, 0) + 1
-      val seen = new java.util.LinkedHashSet[String](count * 2)
-      var i = 0
-      while (i < count) {
-        val end = math.min(i + n, toks.length)
-        seen.add(String.join(" ", java.util.Arrays.asList(toks.slice(i, end): _*)))
-        i += 1
-      }
-      val digest = md5.get()
-      val out = new Array[Long](seen.size)
-      val it = seen.iterator()
-      var j = 0
-      while (it.hasNext) {
-        digest.reset()
-        val d = digest.digest(it.next().getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        // first 15 hex chars = high 60 bits of the digest, big-endian —
-        // identical to CAST(concat('0x', substr(md5(g),1,15)) AS BIGINT)
-        var h = 0L
-        var b = 0
-        while (b < 7) { h = (h << 8) | (d(b) & 0xffL); b += 1 }
-        h = (h << 4) | ((d(7) >> 4) & 0xfL)
-        out(j) = h
-        j += 1
-      }
-      new GenericArrayData(out)
-    }
+    override def nullSafeEval(v: Any): Any =
+      new GenericArrayData(distinctGrams(tokens(v.asInstanceOf[UTF8String]), n)
+        .map(g => Md5Prefix60.hash(g.getBytes(UTF_8))))
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -296,37 +157,17 @@ object TextExpressions {
     * 4×15-bit pigeonhole bands preserve the hamming ≤ 3 guarantee.
     * Repeated tokens vote repeatedly — SimHash weighs by term frequency
     * (that's what distinguishes it from a set sketch). */
-  case class SimHashPortable(child: Expression)
-      extends UnaryExpression {
+  case class SimHashPortable(child: Expression) extends UnaryCallback {
 
     override def dataType: DataType = LongType
 
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("simhashPortExpr", this, classOf[SimHashPortable].getName)
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = ((java.lang.Long) $ref.nullSafeEval($v)).longValue();")
-    }
-
-    @transient private lazy val md5 =
-      new ThreadLocal[java.security.MessageDigest] {
-        override def initialValue(): java.security.MessageDigest =
-          java.security.MessageDigest.getInstance("MD5")
-      }
-
     override def nullSafeEval(v: Any): Any = {
-      val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      val arr = v.asInstanceOf[ArrayData]
       val counts = new Array[Int](60)
-      val digest = md5.get()
       val n = arr.numElements()
       var t = 0
       while (t < n) {
-        digest.reset()
-        val d = digest.digest(
-          arr.getUTF8String(t).toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        var h = 0L
-        var b = 0
-        while (b < 7) { h = (h << 8) | (d(b) & 0xffL); b += 1 }
-        h = (h << 4) | ((d(7) >> 4) & 0xfL)
+        val h = Md5Prefix60.hash(arr.getUTF8String(t).toString.getBytes(UTF_8))
         var i = 0
         while (i < 60) { counts(i) += (if (((h >>> i) & 1L) == 1L) 1 else -1); i += 1 }
         t += 1
@@ -353,10 +194,8 @@ object TextExpressions {
     *
     * Replaces the interpreted `filter(tokens, ...)` HOF the x12 hot path
     * used to evaluate twice per row (measured 7.1 s at sf0.1; per-token
-    * interpreted lambdas are the 100× scan-path trap — see
-    * [[TopTokenShare]]'s 60 s → 0.44 s history). */
-  case class QualitySignals(child: Expression)
-      extends UnaryExpression {
+    * interpreted lambdas are the 100× scan-path trap). */
+  case class QualitySignals(child: Expression) extends UnaryCallback {
 
     override def dataType: DataType = StructType(Seq(
       StructField("punct_ratio", DoubleType, nullable = false),
@@ -364,12 +203,6 @@ object TextExpressions {
       StructField("avg_token_len", DoubleType, nullable = false),
       StructField("n_tokens", LongType, nullable = false),
       StructField("quality", DoubleType, nullable = false)))
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("qualityExpr", this, classOf[QualitySignals].getName)
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $ref.nullSafeEval($v);")
-    }
 
     private val stopSet: java.util.HashSet[String] = {
       val s = new java.util.HashSet[String]()
@@ -382,11 +215,6 @@ object TextExpressions {
       case '.' | ',' | ';' | ':' | '!' | '?' | '\'' | '"' | '(' | ')' | '-' => true
       case _ => false
     }
-
-    // Java regex \s = [ \t\n\x0B\f\r] (ASCII-only), matching Spark's
-    // regexp_replace(trim(text), "\\s", "")
-    private def isWs(cp: Int): Boolean =
-      cp == ' ' || cp == '\t' || cp == '\n' || cp == 0x0b || cp == '\f' || cp == '\r'
 
     override def nullSafeEval(v: Any): Any = {
       val u = v.asInstanceOf[UTF8String]
@@ -401,20 +229,8 @@ object TextExpressions {
         if (isPunct(cp)) punct += 1
         i += Character.charCount(cp)
       }
-      // Spark's trim() strips ASCII space only (UTF8String.trim) — NOT
-      // Java String.trim (which also strips \t, \n, ...)
-      val trimmed = u.trim
-      val trimmedStr = trimmed.toString
-      var nonWs = 0
-      i = 0
-      while (i < trimmedStr.length) {
-        val cp = trimmedStr.codePointAt(i)
-        if (!isWs(cp)) nonWs += 1
-        i += Character.charCount(cp)
-      }
-      // UTF8String.toLowerCase = Spark's lower(): locale-independent
-      // (Java String.toLowerCase follows the JVM locale — Turkish 'I')
-      val toks = trimmed.toLowerCase.toString.split("\\s+", -1)
+      val nonWs = nonWsCount(u.trim.toString)
+      val toks = tokens(u)
       var stops = 0
       i = 0
       while (i < toks.length) {
@@ -431,7 +247,7 @@ object TextExpressions {
       val wordLenScore = if (avgTokenLen >= 3.0 && avgTokenLen <= 10.0) 1.0 else 0.5
       val quality = lengthScore * 25.0 + punctScore * 25.0 +
         stopScore * 25.0 + wordLenScore * 25.0
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      new GenericInternalRow(
         Array[Any](punctRatio, stopRatio, avgTokenLen, toks.length.toLong, quality))
     }
 
@@ -459,49 +275,27 @@ object TextExpressions {
     * (7.0 s for 55 MB of text on 32 cores — ~2 µs/char, all regex engine
     * and UTF8String→String→array churn); this is the QualitySignals fix
     * applied to the x10/x45 scan path. */
-  case class TokenStats(child: Expression)
-      extends UnaryExpression {
+  case class TokenStats(child: Expression) extends UnaryCallback {
 
     override def dataType: DataType = StructType(Seq(
       StructField("n_tokens", LongType, nullable = false),
       StructField("n_bpe_tokens", LongType, nullable = false),
       StructField("avg_token_len", DoubleType, nullable = false)))
 
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("tokenStatsExpr", this, classOf[TokenStats].getName)
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $ref.nullSafeEval($v);")
-    }
-
-    // Java regex \s = [ \t\n\x0B\f\r] (ASCII-only) — the class the split
-    // and extract_all patterns above actually use
-    private def isWs(cp: Int): Boolean =
-      cp == ' ' || cp == '\t' || cp == '\n' || cp == 0x0b || cp == '\f' || cp == '\r'
-
     override def nullSafeEval(v: Any): Any = {
-      val u = v.asInstanceOf[UTF8String]
-      // Spark's trim() strips ASCII space only (UTF8String.trim), and
-      // lower() is locale-independent (UTF8String.toLowerCase) — Java
-      // String.trim/toLowerCase silently diverge (\t-stripping, Turkish I)
-      val trimmed = u.trim
-      // avg_token_len's numerator counts non-ws codepoints of the
-      // TRIMMED original (the Column form regex_replaces trim(text),
-      // not the lowered string — toLowerCase can change codepoint count)
-      val tstr = trimmed.toString
-      var nonWs = 0L
-      var i = 0
-      while (i < tstr.length) {
-        val cp = tstr.codePointAt(i)
-        if (!isWs(cp)) nonWs += 1
-        i += Character.charCount(cp)
-      }
+      // Spark's trim() and lower(), as in [[tokens]]. avg_token_len's
+      // numerator counts the TRIMMED original (the Column form
+      // regex_replaces trim(text), not the lowered string — toLowerCase
+      // can change the codepoint count)
+      val trimmed = v.asInstanceOf[UTF8String].trim
+      val nonWs = nonWsCount(trimmed.toString)
       // one pass over the lowered string: \s+ run count (≡ split
       // boundaries) and the BPE-ish state machine
       val lstr = trimmed.toLowerCase.toString
       var wsRuns = 0L
       var bpe = 0L
       var prev = -1 // 0 = ws, 1 = letter run, 2 = digit run, 3 = other
-      i = 0
+      var i = 0
       while (i < lstr.length) {
         val cp = lstr.codePointAt(i)
         val cls =
@@ -517,7 +311,7 @@ object TextExpressions {
       }
       val nTokens = wsRuns + 1
       val avg = nonWs.toDouble / math.max(nTokens, 1L).toDouble
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      new GenericInternalRow(
         Array[Any](nTokens, bpe, avg))
     }
 
@@ -544,7 +338,7 @@ object TextExpressions {
     * expression; this runs three matcher passes (email count+replace
     * fused) on one converted String. */
   case class PiiRedactionStats(child: Expression, emailRe: String, phoneRe: String)
-      extends UnaryExpression {
+      extends UnaryCallback {
 
     override def dataType: DataType = StructType(Seq(
       StructField("n_emails", LongType, nullable = false),
@@ -554,12 +348,6 @@ object TextExpressions {
 
     @transient private lazy val emailP = java.util.regex.Pattern.compile(emailRe)
     @transient private lazy val phoneP = java.util.regex.Pattern.compile(phoneRe)
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("piiExpr", this, classOf[PiiRedactionStats].getName)
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $ref.nullSafeEval($v);")
-    }
 
     override def nullSafeEval(v: Any): Any = {
       val s = v.asInstanceOf[UTF8String].toString
@@ -578,7 +366,7 @@ object TextExpressions {
       // phone replace on the email-redacted text (nested regexp_replace)
       val red = phoneP.matcher(redE).replaceAll("<PHONE>")
       val lenRed = red.codePointCount(0, red.length).toLong
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      new GenericInternalRow(
         Array[Any](nEmails, nPhones, lenRaw, lenRed))
     }
 
@@ -597,18 +385,12 @@ object TextExpressions {
     * set algebra per doc. Identical count by construction (interval
     * union ≡ distinct of the exploded positions). */
   case class CoveredTokenCount(left: Expression, right: Expression, span: Int)
-      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+      extends BinaryCallback {
 
     override def dataType: DataType = LongType
 
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("coveredExpr", this, classOf[CoveredTokenCount].getName)
-      nullSafeCodeGen(ctx, ev, (p, n) =>
-        s"${ev.value} = ((java.lang.Long) $ref.nullSafeEval($p, $n)).longValue();")
-    }
-
     override def nullSafeEval(posv: Any, ntok: Any): Any = {
-      val arr = posv.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      val arr = posv.asInstanceOf[ArrayData]
       val n = ntok.asInstanceOf[Long]
       val m = arr.numElements()
       val ps = new Array[Long](m)
@@ -638,31 +420,21 @@ object TextExpressions {
     *
     *   n_tokens        = size(split(lower(trim(text)), "\\s+"))
     *   dup_token_ratio = 1.0 − distinct/max(n, 1)
-    *   top_token_ratio = maxCount/max(n, 1)   (≡ [[TopTokenShare]])
+    *   top_token_ratio = maxCount/max(n, 1)
     *
     * The per-signal spelling walked the text three times (two splits +
     * an array_distinct allocation per row just to count unique tokens);
     * the hash map already knows both the distinct count (its size) and
     * the top count (its max). */
-  case class RepetitionStats(child: Expression)
-      extends UnaryExpression {
+  case class RepetitionStats(child: Expression) extends UnaryCallback {
 
     override def dataType: DataType = StructType(Seq(
       StructField("n_tokens", LongType, nullable = false),
       StructField("dup_token_ratio", DoubleType, nullable = false),
       StructField("top_token_ratio", DoubleType, nullable = false)))
 
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("repStatsExpr", this, classOf[RepetitionStats].getName)
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $ref.nullSafeEval($v);")
-    }
-
     override def nullSafeEval(v: Any): Any = {
-      // UTF8String.trim/toLowerCase — Spark's own trim (ASCII space) and
-      // locale-independent lower, matching the Column forms exactly
-      val toks = v.asInstanceOf[UTF8String].trim.toLowerCase.toString
-        .split("\\s+", -1)
+      val toks = tokens(v.asInstanceOf[UTF8String])
       val counts = new java.util.HashMap[String, Int](toks.length * 2)
       var max = 0
       var i = 0
@@ -673,48 +445,10 @@ object TextExpressions {
       }
       val n = toks.length.toLong
       val denom = math.max(n, 1L).toDouble
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      new GenericInternalRow(
         Array[Any](n,
           1.0 - counts.size.toDouble / denom,
           max.toDouble / denom))
-    }
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** Frequency share of the most common token: tokenize once, count in
-    * a hash map, return max/n. The Column-HOF formulation (fold over the
-    * sorted array with element_at) evaluates its lambda interpreted per
-    * element — measured 60 s for 5k docs at sf0.1 vs sub-second here. */
-  case class TopTokenShare(child: Expression)
-      extends UnaryExpression {
-
-    override def dataType: DataType = DoubleType
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("topTokenExpr", this, classOf[TopTokenShare].getName)
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = ((java.lang.Double) $ref.nullSafeEval($v)).doubleValue();")
-    }
-
-    override def nullSafeEval(v: Any): Any = {
-      // UTF8String.trim/toLowerCase: Spark's own trim() (ASCII space
-      // only) and lower() (locale-independent) semantics — Java
-      // String.trim also strips \t/\n, and String.toLowerCase follows
-      // the JVM default locale (Turkish 'I'→'ı'), either of which
-      // silently diverges from the Column forms and DuckDB oracles
-      val toks = v.asInstanceOf[UTF8String].trim.toLowerCase.toString
-        .split("\\s+", -1)
-      val counts = new java.util.HashMap[String, Int](toks.length * 2)
-      var max = 0
-      var i = 0
-      while (i < toks.length) {
-        val c = counts.merge(toks(i), 1, (a, b) => a + b)
-        if (c > max) max = c
-        i += 1
-      }
-      max.toDouble / math.max(toks.length, 1)
     }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -725,16 +459,9 @@ object TextExpressions {
     * stopword hit counts, argmax with the same tie-break as
     * `greatest(struct(score, lang))` in [[TextFunctions.langId]] —
     * equal scores → lexicographically larger language code wins. */
-  case class LangId(child: Expression)
-      extends UnaryExpression {
+  case class LangId(child: Expression) extends UnaryCallback {
 
     override def dataType: DataType = StringType
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("langIdExpr", this, classOf[LangId].getName)
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = (org.apache.spark.unsafe.types.UTF8String) $ref.nullSafeEval($v);")
-    }
 
     // langs sorted ascending; token → bitmask of matching langs
     private val langs: Array[String] = TextFunctions.stopwords.keys.toArray.sorted
@@ -749,13 +476,7 @@ object TextExpressions {
     }
 
     override def nullSafeEval(v: Any): Any = {
-      // UTF8String.trim/toLowerCase: Spark's own trim() (ASCII space
-      // only) and lower() (locale-independent) semantics — Java
-      // String.trim also strips \t/\n, and String.toLowerCase follows
-      // the JVM default locale (Turkish 'I'→'ı'), either of which
-      // silently diverges from the Column forms and DuckDB oracles
-      val toks = v.asInstanceOf[UTF8String].trim.toLowerCase.toString
-        .split("\\s+", -1)
+      val toks = tokens(v.asInstanceOf[UTF8String])
       val counts = new Array[Int](langs.length)
       var i = 0
       while (i < toks.length) {
@@ -783,45 +504,6 @@ object TextExpressions {
       copy(child = newChild)
   }
 
-  /** 64-bit SimHash of a token array: per-bit majority vote over each
-    * token's 128-bit (2×Murmur3) hash. Bit-identical to the previous
-    * UDF formulation (same MurmurHash3 seeds), but a native expression:
-    * no UDF serialization boundary, stays inside whole-stage codegen. */
-  case class SimHash64(child: Expression)
-      extends UnaryExpression {
-
-    override def dataType: DataType = LongType
-
-    override def nullSafeEval(v: Any): Any = {
-      val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      val counts = new Array[Int](64)
-      val n = arr.numElements()
-      var t = 0
-      while (t < n) {
-        val tok = arr.getUTF8String(t).toString
-        val h1 = scala.util.hashing.MurmurHash3.stringHash(tok, 0x9747b28c)
-        val h2 = scala.util.hashing.MurmurHash3.stringHash(tok, 0x85ebca6b)
-        val h = (h1.toLong << 32) | (h2.toLong & 0xffffffffL)
-        var i = 0
-        while (i < 64) { counts(i) += (if (((h >>> i) & 1L) == 1L) 1 else -1); i += 1 }
-        t += 1
-      }
-      var out = 0L
-      var i = 0
-      while (i < 64) { if (counts(i) > 0) out |= (1L << i); i += 1 }
-      out
-    }
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("simhashExpr", this, classOf[SimHash64].getName)
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = ((java.lang.Long) $ref.nullSafeEval($v)).longValue();")
-    }
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
   /** WINNOWED positional word n-grams — the standard winnowing
     * reduction (Schleimer et al., SIGMOD 2003: the MOSS fingerprint
     * selection) applied doc-locally in one compiled pass: build every
@@ -843,52 +525,16 @@ object TextExpressions {
     * incidental single-gram overlaps may not. Selection is per
     * document and hash-deterministic: the same text selects the same
     * positions in every engine. */
-  case class WinnowedPositional(child: Expression, n: Int, w: Int)
-      extends UnaryExpression {
+  case class WinnowedPositional(child: Expression, n: Int, w: Int) extends UnaryCallback {
 
     override def dataType: DataType = ArrayType(StructType(Seq(
       StructField("pos", IntegerType, nullable = false),
       StructField("gram", StringType, nullable = false))), containsNull = false)
 
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("winnowExpr", this, classOf[WinnowedPositional].getName)
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($v);")
-    }
-
-    @transient private lazy val md5 =
-      new ThreadLocal[java.security.MessageDigest] {
-        override def initialValue(): java.security.MessageDigest =
-          java.security.MessageDigest.getInstance("MD5")
-      }
-
-    /** First 60 bits of md5 as a non-negative long — identical to
-      * DuckDB's CAST(concat('0x', substr(md5(g),1,15)) AS BIGINT). */
-    private def h60(gram: String): Long = {
-      val d = md5.get(); d.reset()
-      val b = d.digest(gram.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      // first 15 hex chars = 7 full bytes + the high nibble of byte 8
-      var v = 0L
-      var i = 0
-      while (i < 7) { v = (v << 8) | (b(i) & 0xffL); i += 1 }
-      (v << 4) | ((b(7) >> 4) & 0xfL)
-    }
-
     override def nullSafeEval(v: Any): Any = {
-      // UTF8String.trim/toLowerCase — Spark's trim/lower semantics
-      // (WordShingleHashes documents the Java String divergence)
-      val toks = v.asInstanceOf[UTF8String].trim.toLowerCase.toString
-        .split("\\s+", -1)
-      val m = math.max(toks.length - n, 0) + 1
-      val grams = new Array[String](m)
-      val hs = new Array[Long](m)
-      var i = 0
-      while (i < m) {
-        val end = math.min(i + n, toks.length)
-        grams(i) = String.join(" ", java.util.Arrays.asList(toks.slice(i, end): _*))
-        hs(i) = h60(grams(i))
-        i += 1
-      }
+      val gs = grams(tokens(v.asInstanceOf[UTF8String]), n)
+      val hs = gs.map(g => Md5Prefix60.hash(g.getBytes(UTF_8)))
+      val m = gs.length
       // windows j..j+w-1 (clamped); ascending scan with <= keeps the
       // rightmost minimum — selections accumulate in a sorted set
       // because a later window can select an earlier position than a
@@ -909,8 +555,7 @@ object TextExpressions {
       var o = 0
       while (it.hasNext) {
         val p = it.next().intValue()
-        out(o) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](p, UTF8String.fromString(grams(p))))
+        out(o) = new GenericInternalRow(Array[Any](p, UTF8String.fromString(gs(p))))
         o += 1
       }
       new GenericArrayData(out)
@@ -930,31 +575,21 @@ object TextExpressions {
     * inside the scan task, so the explode emits ALREADY-UNIQUE
     * (doc, token, tf) rows and the downstream groupBy vanishes — no
     * 1M-row explode feeding a hash aggregate, no exchange of raw token
-    * mass). Same UTF8String trim/lower semantics as the shingle
-    * kernels (ASCII-space trim, locale-independent lower — Java
-    * String.trim/toLowerCase would silently diverge). Empty text
-    * yields the [""] token exactly like the split chain; callers keep
-    * their length>0 filters.
+    * mass). Empty text yields the [""] token exactly like the split
+    * chain ([[tokens]]); callers keep their length>0 filters.
     *
     * Precondition: the row key the caller keeps beside the counts (the
     * corpus's `doc_id`) must be unique. The counts are per row, so two
     * rows with one `doc_id` give two (doc, token) rows where the
     * groupBy chain gave one summed row. */
-  case class TokenCounts(child: Expression) extends UnaryExpression {
+  case class TokenCounts(child: Expression) extends UnaryCallback {
 
     override def dataType: DataType = ArrayType(StructType(Seq(
       StructField("token", StringType, nullable = false),
       StructField("tf", LongType, nullable = false))), containsNull = false)
 
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("tokenCountsExpr", this, classOf[TokenCounts].getName)
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($v);")
-    }
-
     override def nullSafeEval(v: Any): Any = {
-      val toks = v.asInstanceOf[UTF8String].trim.toLowerCase.toString
-        .split("\\s+", -1)
+      val toks = tokens(v.asInstanceOf[UTF8String])
       val counts = new java.util.LinkedHashMap[String, Long](toks.length * 2)
       var i = 0
       while (i < toks.length) {
@@ -966,7 +601,7 @@ object TextExpressions {
       var j = 0
       while (it.hasNext) {
         val e = it.next()
-        out(j) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+        out(j) = new GenericInternalRow(
           Array[Any](UTF8String.fromString(e.getKey), e.getValue))
         j += 1
       }
@@ -991,22 +626,15 @@ object TextExpressions {
     * Precondition: as for [[TokenCounts]], the caller's row key
     * (`doc_id`) must be unique, or one document's bigrams come out as
     * several rows instead of one summed row. */
-  case class BigramCounts(child: Expression) extends UnaryExpression {
+  case class BigramCounts(child: Expression) extends UnaryCallback {
 
     override def dataType: DataType = ArrayType(StructType(Seq(
       StructField("w1", StringType, nullable = false),
       StructField("w2", StringType, nullable = false),
       StructField("m", LongType, nullable = false))), containsNull = false)
 
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("bigramCountsExpr", this, classOf[BigramCounts].getName)
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($v);")
-    }
-
     override def nullSafeEval(v: Any): Any = {
-      val toks = v.asInstanceOf[UTF8String].trim.toLowerCase.toString
-        .split("\\s+", -1)
+      val toks = tokens(v.asInstanceOf[UTF8String])
       if (toks.length < 2) return new GenericArrayData(new Array[Any](0))
       // tokens contain no whitespace (they are split on it), so the
       // space-joined pair is a collision-free map key
@@ -1022,7 +650,7 @@ object TextExpressions {
       while (it.hasNext) {
         val e = it.next()
         val sep = e.getKey.indexOf(' ')
-        out(j) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+        out(j) = new GenericInternalRow(
           Array[Any](UTF8String.fromString(e.getKey.substring(0, sep)),
             UTF8String.fromString(e.getKey.substring(sep + 1)), e.getValue))
         j += 1
@@ -1042,14 +670,8 @@ object TextExpressions {
   def bigramCounts(text: Column): Column =
     column(BigramCounts(expression(text)))
 
-  def wordShingleHashes(text: Column, n: Int): Column =
-    column(WordShingleHashes(expression(text), n))
-
   def wordShingleStrings(text: Column, n: Int): Column =
     column(WordShingleStrings(expression(text), n))
-
-  def wordShinglePortableHashes(text: Column, n: Int): Column =
-    column(WordShinglePortableHashes(expression(text), n))
 
   def wordShinglePositional(text: Column, n: Int): Column =
     column(WordShinglePositional(expression(text), n))
@@ -1059,8 +681,6 @@ object TextExpressions {
 
   def simHashPortable(tokens: Column): Column =
     column(SimHashPortable(expression(tokens)))
-
-  def topTokenShare(text: Column): Column = column(TopTokenShare(expression(text)))
 
   def fingerprintSketch(text: Column, n: Int, k: Int): Column =
     column(FingerprintSketch(expression(text), n, k))
@@ -1078,6 +698,4 @@ object TextExpressions {
     column(PiiRedactionStats(expression(text), emailRe, phoneRe))
 
   def langId(text: Column): Column = column(LangId(expression(text)))
-
-  def simHash64(tokens: Column): Column = column(SimHash64(expression(tokens)))
 }

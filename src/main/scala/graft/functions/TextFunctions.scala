@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.{toColumn, toExpression}
 
 /** Text-analysis building blocks for large-scale training-data pipelines
   * (language ID, quality scoring, token counting, fingerprinting — the
@@ -36,19 +37,13 @@ object TextFunctions {
         i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
   }
 
-  /** 64-bit hashes of the distinct shingle set (xxhash64 — same codegen
-    * hash Spark uses for shuffle partitioning). Downstream MinHash works
-    * on these longs, never re-touching the strings.
-    * Compiled single-pass expression; bit-identical to
-    * `transform(wordShingles(text, n), xxhash64)`. */
+  /** 60-bit hashes of the distinct shingle set, bit-identical to
+    * `transform(wordShingles(text, n), g -> conv(substr(md5(g), 1, 15), 16, 10))`
+    * ([[TextExpressions.WordShinglePortableHashes]]): a DuckDB oracle can
+    * rebuild them, where xxhash64 cannot leave Spark. Downstream MinHash
+    * works on these longs, never re-touching the strings. */
   def shingleHashes(text: Column, n: Int): Column =
-    TextExpressions.wordShingleHashes(text, n)
-
-  /** Engine-portable variant of [[shingleHashes]]: 60-bit md5-prefix
-    * gram hashes a DuckDB oracle can rebuild (xxhash64 cannot leave
-    * Spark). Same shingling, hash-agnostic downstream. */
-  def portableShingleHashes(text: Column, n: Int): Column =
-    TextExpressions.wordShinglePortableHashes(text, n)
+    toColumn(TextExpressions.WordShinglePortableHashes(toExpression(text), n))
 
   // ---- language ID ----------------------------------------------------
 
@@ -117,11 +112,13 @@ object TextFunctions {
       greatest(size(toks), lit(1)).cast("double")
   }
 
-  /** Frequency share of the single most common token — a compiled
-    * single-pass expression (per-row hash-map count, no shuffle; the
-    * explode+groupBy formulation would shuffle every token in the
-    * corpus, and an interpreted HOF fold measured 60× slower). */
-  def topTokenRatio(text: Column): Column = TextExpressions.topTokenShare(text)
+  /** Frequency share of the single most common token — the
+    * `top_token_ratio` of the compiled [[TextExpressions.RepetitionStats]]
+    * (per-row hash-map count, no shuffle; the explode+groupBy formulation
+    * would shuffle every token in the corpus, and an interpreted HOF fold
+    * measured 60× slower). */
+  def topTokenRatio(text: Column): Column =
+    TextExpressions.repetitionStats(text).getField("top_token_ratio")
 
   // ---- fingerprinting -------------------------------------------------
 

@@ -92,7 +92,7 @@ object VectorExpressions {
     * exactly Catalyst's Cast semantics), where the HOF form allocated
     * and boxed a fresh cast array per child per dot (6 interpreted
     * array walks per cosine — dominant cost of every pair join in the
-    * similarity family, found by the r19 x109 profile).
+    * similarity family, as the x109 profile showed).
     *
     * Like [[DotProduct]], aa/bb fold over their OWN lengths and ab over
     * min(na, nb) — the exact bounds the three-dot form used. */
@@ -101,8 +101,8 @@ object VectorExpressions {
 
     override def dataType: DataType = DoubleType
 
-    // ADVICE r19: fail analysis (not runtime garbage reads) on wrong-typed
-    // input — each side must be an array of a supported numeric element.
+    // fail analysis (not runtime garbage reads) on wrong-typed input —
+    // each side must be an array of a supported numeric element.
     // containsNull=true is ACCEPTED: the driver parquet declares nullable
     // elements on every embedding column even though no element is ever
     // null, so rejecting the flag would fail analysis on valid data; a
@@ -172,8 +172,8 @@ object VectorExpressions {
     }
 
     override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      // null-aware slow path: one interpreted call, only when a null
-      // element exists (same ref-obj pattern as JaccardLongSize)
+      // null-aware slow path: one call back into nullSafeEval (as in
+      // CallbackCodegen), only when a null element exists
       val ref = ctx.addReferenceObj("cosineExpr", this, classOf[CosineSim].getName)
       nullSafeCodeGen(ctx, ev, (a, b) => {
         val (tx, ty) = (elemType(left), elemType(right))
@@ -225,7 +225,7 @@ object VectorExpressions {
   case class QuantizeLong(child: Expression, scale: Double)
       extends UnaryExpression {
 
-    // containsNull mirrors the input (ADVICE r19): a null element
+    // containsNull mirrors the input: a null element
     // PROPAGATES like the transform(cast)+floor HOF chain this replaces —
     // never silently quantized to 0. The driver parquet declares nullable
     // elements (though none are null in the data), so output metadata
@@ -236,8 +236,8 @@ object VectorExpressions {
         case _ => true
       })
 
-    // ADVICE r19: wrong-typed input (e.g. array<long>) must fail analysis,
-    // not read garbage via getDouble at runtime.
+    // wrong-typed input (e.g. array<long>) must fail analysis, not read
+    // garbage via getDouble at runtime.
     override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
       case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
       case other => TypeCheckResult.TypeCheckFailure(
@@ -278,8 +278,8 @@ object VectorExpressions {
     }
 
     override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      // ADVICE r19: splice the scale constant via a bit-exact
-      // longBitsToDouble round-trip — `$scale` interpolation would emit
+      // splice the scale constant via a bit-exact longBitsToDouble
+      // round-trip — `$scale` interpolation would emit
       // uncompilable Java for NaN/Infinity scales
       val scaleJ =
         s"java.lang.Double.longBitsToDouble(${java.lang.Double.doubleToRawLongBits(scale)}L)"
@@ -319,15 +319,15 @@ object VectorExpressions {
     * with open-addressing primitive long sets instead of two boxed
     * set builds PLUS materializing the intersection/union arrays that
     * only ever feed `size` — the per-pair cost of every jaccard verify
-    * join in the near-dup family (r19 x03 profile). Long-array inputs
+    * join in the near-dup family (the x03 profile). Long-array inputs
     * only (the shingle-hash frames); arrays must not contain null
     * elements, which holds for every hash-derived array in the tree. */
   case class JaccardLongSize(left: Expression, right: Expression)
-      extends BinaryExpression {
+      extends BinaryCallback {
 
     override def dataType: DataType = DoubleType
 
-    // ADVICE r19: long-array inputs only — anything else (e.g. the public
+    // long-array inputs only — anything else (e.g. the public
     // Sketches.jaccardLong reached with array<string>) fails analysis
     // instead of reading garbage through getLong. containsNull=true is
     // accepted (parquet metadata declares it even on never-null data); a
@@ -389,15 +389,6 @@ object VectorExpressions {
       inter.toDouble / math.max(union, 1).toDouble
     }
 
-    // single interpreted call per evaluation (the QuantAudit pattern) —
-    // the loops above are JIT-compiled Scala; codegen only avoids the
-    // fallback's row-boxing
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("jaccardExpr", this, classOf[JaccardLongSize].getName)
-      nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"${ev.value} = ((Double) $ref.nullSafeEval($a, $b)).doubleValue();")
-    }
-
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
@@ -412,11 +403,11 @@ object VectorExpressions {
     * PER EVALUATION — measurable on the per-gram hash paths (x115 spans,
     * x76 KMV). The DuckDB oracles keep the spelled-out SQL chain, which
     * is exactly why the value equivalence is spec-asserted. */
-  case class Md5Prefix60(child: Expression) extends UnaryExpression {
+  case class Md5Prefix60(child: Expression) extends UnaryCallback {
 
     override def dataType: DataType = LongType
 
-    // ADVICE r19: string input only — a non-string child would
+    // string input only — a non-string child would
     // ClassCastException opaquely at runtime; fail analysis instead.
     override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
       case StringType => TypeCheckResult.TypeCheckSuccess
@@ -424,31 +415,32 @@ object VectorExpressions {
         s"Md5Prefix60 requires a string input, got ${other.catalogString}")
     }
 
-    @transient private lazy val md5 =
-      new ThreadLocal[java.security.MessageDigest] {
-        override def initialValue(): java.security.MessageDigest =
-          java.security.MessageDigest.getInstance("MD5")
-      }
+    override def nullSafeEval(v: Any): Any =
+      Md5Prefix60.hash(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes)
 
-    override def nullSafeEval(v: Any): Any = {
-      val digest = md5.get()
-      digest.reset()
-      val d = digest.digest(
-        v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes)
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  /** The one MD5 of the compiled kernels: a digest per thread, and the
+    * 60-bit prefix every portable gram and token hash is made of. */
+  object Md5Prefix60 {
+
+    private val digest = ThreadLocal.withInitial[java.security.MessageDigest](() =>
+      java.security.MessageDigest.getInstance("MD5"))
+
+    /** The 16-byte MD5 of `bytes`. */
+    def md5(bytes: Array[Byte]): Array[Byte] = digest.get().digest(bytes)
+
+    /** The first 15 hex chars of `md5(bytes)` as a non-negative long: the
+      * first 8 digest bytes big-endian, shifted right 4. */
+    def hash(bytes: Array[Byte]): Long = {
+      val d = md5(bytes)
       var l = 0L
       var i = 0
       while (i < 8) { l = (l << 8) | (d(i) & 0xffL); i += 1 }
       l >>> 4
     }
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("md5PrefixExpr", this, classOf[Md5Prefix60].getName)
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = ((Long) $ref.nullSafeEval($v)).longValue();")
-    }
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
   }
 
   /** Sign bits of <v, plane_b> for `nBits` constant hyperplanes
@@ -504,11 +496,9 @@ object VectorExpressions {
     * array (array<struct<ccl: long, cc: array<long>>>), and the result
     * the w seed ids ordered by (cosine DESC, ccl ASC) — the exact
     * window/ROW_NUMBER tie-break both engines replay. One compiled
-    * loop per row replaces BOTH the N·ncoarse window exchange (the
-    * r15 plan) and the interpreted transform+array_sort HOF pair (the
-    * first r16 rewrite, which measured SLOWER at sf0.1 because Spark
-    * evaluates HOF lambdas interpreted — the Sketches-vs-
-    * VectorExpressions lesson re-learned on this operator).
+    * loop per row replaces BOTH an N·ncoarse window exchange and an
+    * interpreted transform+array_sort HOF pair (which measured SLOWER
+    * at sf0.1 because Spark evaluates HOF lambdas interpreted).
     *
     * Cosine arithmetic replicates `cosine(asDouble(a), asDouble(b))`
     * IEEE-exactly: ascending-index multiply-add folds (dot over the
@@ -787,7 +777,7 @@ object VectorExpressions {
     * Elements arrive as float (driver parquet) or double (the cast the
     * HOF form applied first): float→double widening is exact, so both
     * input shapes produce identical audits. */
-  case class QuantAudit(child: Expression) extends UnaryExpression {
+  case class QuantAudit(child: Expression) extends UnaryCallback {
 
     override def dataType: DataType = StructType(Seq(
       StructField("scale", DoubleType, nullable = false),
@@ -797,12 +787,6 @@ object VectorExpressions {
 
     private lazy val elemIsFloat =
       child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("quantAuditExpr", this, classOf[QuantAudit].getName)
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $ref.nullSafeEval($v);")
-    }
 
     override def nullSafeEval(v: Any): Any = {
       val x = v.asInstanceOf[ArrayData]
@@ -846,18 +830,12 @@ object VectorExpressions {
     * EXACT (≤ dim·127² ≪ 2⁵³), so downstream cosines are identical
     * IEEE arithmetic in any engine — the x28 quantized-index recipe
     * applied to the int8 rung. */
-  case class Int8Quantize(child: Expression) extends UnaryExpression {
+  case class Int8Quantize(child: Expression) extends UnaryCallback {
 
     override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
     private lazy val elemIsFloat =
       child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("int8QuantExpr", this, classOf[Int8Quantize].getName)
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($v);")
-    }
 
     override def nullSafeEval(v: Any): Any = {
       val x = v.asInstanceOf[ArrayData]

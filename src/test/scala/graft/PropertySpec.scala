@@ -220,7 +220,7 @@ class PropertySpec extends SparkSpec {
     forAll(Gen.nonEmptyListOf(nastyTextGen)) { texts =>
       val rows = texts.toDF("text")
         .select(col("text"),
-          graft.functions.TextFunctions.portableShingleHashes(col("text"), 3).as("ph"),
+          graft.functions.TextFunctions.shingleHashes(col("text"), 3).as("ph"),
           transform(graft.functions.TextFunctions.wordShingles(col("text"), 3),
             g => conv(substring(md5(g), 1, 15), 16, 10).cast("long")).as("ref"))
         .collect()

@@ -249,15 +249,40 @@ class PlanSpec extends SparkSpec {
   }
 
   test("sketch expressions run inside WholeStageCodegen") {
+    import org.apache.spark.sql.functions.{array, col, length, lit}
+    import graft.functions.{BloomProbe, TextExpressions => T, TextFunctions, VectorExpressions => V}
+    val text = col("text")
+    val sh = TextFunctions.shingleHashes(text, 3)
+    val vec = array(lit(1.5), lit(-2.0), length(text).cast("double"))
+    val bloom = org.apache.spark.util.sketch.BloomFilter.create(16)
+    bloom.putString("the")
+    // every kernel whose generated code is the CallbackCodegen callback
+    val kernels = Seq(
+      T.wordShingleStrings(text, 2), T.wordShinglePositional(text, 2),
+      T.fingerprintSketch(text, 2, 3), sh, T.simHashPortable(TextFunctions.tokens(text)),
+      T.qualitySignals(text), T.tokenStats(text),
+      T.piiRedactionStats(text, "[a-z]+@[a-z]+", "[0-9]{3}"),
+      T.coveredTokenCount(array(lit(0L), lit(2L)), length(text).cast("long"), 3),
+      T.repetitionStats(text), T.langId(text), T.winnowedPositional(text, 2, 3),
+      T.tokenCounts(text), T.bigramCounts(text),
+      V.jaccardLongSize(sh, sh), V.md5Prefix60(text), V.quantAudit(vec), V.int8Quantize(vec),
+      BloomProbe.bloomMightContain(bloom, text))
     val df = graft.Tables.load(spark, sfDir, "documents")
-      .select(graft.functions.TextFunctions.shingleHashes(
-        org.apache.spark.sql.functions.col("text"), 3).as("sh"))
+      .select(kernels.zipWithIndex.map { case (k, i) => k.as(s"k$i") }: _*)
     val p = plan(df)
     // formatted mode tags codegen'd operators "(n) Project [codegen id : N]"
     // in the detail section
     val projLine = p.linesIterator
       .find(l => l.contains("Project") && l.contains("codegen id")).getOrElse("")
     assert(projLine.nonEmpty, s"sketch projection fell out of codegen:\n$p")
+    // a generated body that does not compile must fail here, not fall
+    // back to interpreted evaluation
+    val strict = Seq("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val prev = strict.map { case (k, _) => k -> spark.conf.getOption(k) }
+    strict.foreach { case (k, v) => spark.conf.set(k, v) }
+    try assert(df.collect().length == graft.Tables.load(spark, sfDir, "documents").count())
+    finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   test("daily spine joins a broadcast spine — corpus size never drives the join") {

@@ -92,16 +92,21 @@ class TextFunctionsSpec extends SparkSpec {
         stopScore * lit(25.0) + wordLenScore * lit(25.0)
     }
     val qs = TextExpressions.qualitySignals(col("text"))
-    val mismatches = graft.Tables.load(spark, sfDir, "documents")
-      .select(qs.as("qs"), oldPunct.as("p"), oldStop.as("s"),
-              oldAvgLen.as("a"), size(toks).cast("long").as("n"), oldQuality.as("q"))
-      .filter(col("qs.punct_ratio") =!= col("p") ||
-        col("qs.stopword_ratio") =!= col("s") ||
-        col("qs.avg_token_len") =!= col("a") ||
-        col("qs.n_tokens") =!= col("n") ||
-        col("qs.quality") =!= col("q"))
-    assert(mismatches.count() == 0,
-      "compiled QualitySignals must match the Column forms exactly (oracle contract)")
+    def assertMatches(df: org.apache.spark.sql.DataFrame, label: String): Unit = {
+      val mismatches = df
+        .select(qs.as("qs"), oldPunct.as("p"), oldStop.as("s"),
+                oldAvgLen.as("a"), size(toks).cast("long").as("n"), oldQuality.as("q"))
+        .filter(col("qs.punct_ratio") =!= col("p") ||
+          col("qs.stopword_ratio") =!= col("s") ||
+          col("qs.avg_token_len") =!= col("a") ||
+          col("qs.n_tokens") =!= col("n") ||
+          col("qs.quality") =!= col("q"))
+      assert(mismatches.count() == 0,
+        s"compiled QualitySignals must match the Column forms exactly ($label)")
+    }
+    import spark.implicits._
+    assertMatches(graft.Tables.load(spark, sfDir, "documents"), "corpus")
+    assertMatches(EdgeTexts.whitespace.toDF("text"), "edge cases")
   }
 
   test("tokenStats struct is bit-identical to the Column formulations") {
@@ -128,7 +133,7 @@ class TextFunctionsSpec extends SparkSpec {
     // digit/letter/punct run transitions, NBSP (non-ASCII ws is NOT \s)
     val edges = Seq("", " ", "\t", " \t ", "a", "ab12, cd", "a  b\tc\nd",
       "\ta b\t", "ÉcLaIr café 42türk", "𝔘𝔫𝔦𝔠𝔬𝔡𝔢", "a b",
-      "...!!!", "a1b2c3", "  x  ", "İstanbul I ı", "12 34.56")
+      "...!!!", "a1b2c3", "  x  ", "İstanbul I ı", "12 34.56") ++ EdgeTexts.whitespace
     assertMatches(edges.toDF("text"), "edge cases")
   }
 
@@ -136,10 +141,15 @@ class TextFunctionsSpec extends SparkSpec {
     import graft.functions.TextExpressions
     import spark.implicits._
     val rs = TextExpressions.repetitionStats(col("text"))
+    // top_token_ratio spelled in Column HOFs: the largest count of one
+    // distinct token, over the token count
+    val toks = tokens(col("text"))
+    val topRef = array_max(transform(array_distinct(toks), t => size(filter(toks, x => x === t))))
+      .cast("double") / greatest(size(toks), lit(1)).cast("double")
     def assertMatches(df: org.apache.spark.sql.DataFrame, label: String): Unit = {
       val mismatches = df
         .select(rs.as("rs"), tokenCount(col("text")).cast("long").as("n"),
-          dupTokenRatio(col("text")).as("d"), topTokenRatio(col("text")).as("t"))
+          dupTokenRatio(col("text")).as("d"), topRef.as("t"))
         .filter(col("rs.n_tokens") =!= col("n") ||
           col("rs.dup_token_ratio") =!= col("d") ||
           col("rs.top_token_ratio") =!= col("t"))
@@ -148,8 +158,8 @@ class TextFunctionsSpec extends SparkSpec {
     }
     assertMatches(graft.Tables.load(spark, sfDir, "documents"), "corpus")
     val edges = Seq("", " ", "\t", "a", "a b a a", "x y z", "solo",
-      "\ta b\t", "A a A", "𝔘 𝔘 b").toDF("text")
-    assertMatches(edges, "edge cases")
+      "\ta b\t", "A a A", "𝔘 𝔘 b") ++ EdgeTexts.whitespace
+    assertMatches(edges.toDF("text"), "edge cases")
   }
 
   test("piiRedactionStats struct is bit-identical to the Column formulations") {

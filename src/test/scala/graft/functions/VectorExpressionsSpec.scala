@@ -294,15 +294,16 @@ class VectorExpressionsSpec extends SparkSpec {
     assert(e.getAs[scala.collection.Seq[Long]]("x").forall(_ == Long.MaxValue))
   }
 
-  test("WordShingleHashes matches transform(wordShingles, xxhash64) exactly") {
+  test("shingleHashes = transform(wordShingles, md5 60-bit prefix)") {
     val texts = Seq(
       "The quick brown fox jumps over the lazy dog",
       "  padded   with   runs\tof\nwhitespace  ",
       "one", "one two", "a b c a b c a b c",
-      "Ünïcode tökens and CAPS and 123 numbers")
+      "Ünïcode tökens and CAPS and 123 numbers") ++ EdgeTexts.whitespace
     val df = texts.toDF("text")
-    val hof = transform(TextFunctions.wordShingles(col("text"), 3), s => xxhash64(s))
-    val bad = df.select(TextExpressions.wordShingleHashes(col("text"), 3).as("x"), hof.as("y"))
+    val hof = transform(TextFunctions.wordShingles(col("text"), 3),
+      g => conv(substring(md5(g), 1, 15), 16, 10).cast("bigint"))
+    val bad = df.select(TextFunctions.shingleHashes(col("text"), 3).as("x"), hof.as("y"))
       .filter(col("x") =!= col("y")).count()
     assert(bad == 0)
   }
@@ -313,7 +314,7 @@ class VectorExpressionsSpec extends SparkSpec {
       "  padded   with   runs\tof\nwhitespace  ",
       "one", "one two three four five six seven eight nine",
       "a b c a b c a b c",
-      "Ünïcode tökens and CAPS and 123 numbers")
+      "Ünïcode tökens and CAPS and 123 numbers") ++ EdgeTexts.whitespace
     val df = texts.toDF("text")
     for (n <- Seq(2, 8)) {
       val bad = df.select(
@@ -331,7 +332,8 @@ class VectorExpressionsSpec extends SparkSpec {
       "el perro es un animal que no es gato",
       "le chien est dans le jardin pour la nuit",
       "xyzzy plugh qwerty",        // no stopwords at all → tie on 0
-      "the der el le")             // every lang scores once → 4-way tie
+      "the der el le",             // every lang scores once → 4-way tie
+      "the\u000Bder\fel\r\nle\tthe", "the\u00A0cat the\u2003dog") ++ EdgeTexts.whitespace
     val df = texts.toDF("text")
     val hofScored = TextFunctions.stopwords.keys.toSeq.sorted.map(l =>
       struct(TextFunctions.stopwordRatio(col("text"), l).as("score"), lit(l).as("lang")))
@@ -347,7 +349,7 @@ class VectorExpressionsSpec extends SparkSpec {
       (2L, "  Leading  And   MIXED case  "),
       (3L, ""),                       // empty text → the [""] token, tf 1
       (4L, "Ünïcode tökens ünïcode"),
-      (5L, "a b c a b a"))
+      (5L, "a b c a b a")) ++ EdgeTexts.whitespace.zipWithIndex.map { case (t, i) => (100L + i, t) }
     val df = texts.toDF("doc_id", "text")
     val hof = df
       .select(col("doc_id"), explode(TextFunctions.tokens(col("text"))).as("token"))
@@ -366,7 +368,7 @@ class VectorExpressionsSpec extends SparkSpec {
       (2L, "one"),                    // < 2 tokens → no bigrams
       (3L, ""),
       (4L, "  A  b   a b A  "),
-      (5L, "x y x y x"))
+      (5L, "x y x y x")) ++ EdgeTexts.whitespace.zipWithIndex.map { case (t, i) => (100L + i, t) }
     val df = texts.toDF("doc_id", "text")
     val t = TextFunctions.tokens(col("text"))
     val n = greatest(size(t) - lit(1), lit(0))
